@@ -1,15 +1,34 @@
 """Table catalog over the driver-provided parquet fixtures (SURVEY.md §1.2).
 
 Ten tables: region nation customer supplier part orders lineitem
-events documents embeddings. One gotcha handled here once so no query
-has to care: events.ts is parquet timestamp[ns], which Spark 4 reads
-(only with legacy.parquet.nanosAsLong=true) as bigint nanoseconds.
-We convert with INTEGER division to microseconds — matching DuckDB's
-native ns→µs truncation exactly; float division would lose precision
-(ns epoch needs ~61 mantissa bits, double has 52). See FIXTURES.md.
+events documents embeddings. This module is the one place that maps a
+fixture table to its files and decides where the engine writes:
+
+- `fixture_bytes` / `fixture_stamp`: size and change stamp of a
+  table's files (one private listing; a table is one parquet file or a
+  directory of part files). Every fixture-derived cache keys on the
+  stamp, so a rewritten fixture is never served stale.
+- `normalize_ts`: the timestamp rule every fixture read goes through.
+  The shipped fixtures store `events.ts`, `o_orderdate` and
+  `l_shipdate` as parquet timestamp[us] (naive), which a vanilla
+  Spark 4 session reads as TIMESTAMP_NTZ; they are cast to TIMESTAMP.
+  Older fixtures stored `events.ts` as timestamp[ns], which Spark 4
+  reads (only with legacy.parquet.nanosAsLong=true) as bigint
+  nanoseconds; that branch converts with INTEGER division to
+  microseconds, matching DuckDB's native ns→µs truncation exactly.
+  Float division would lose precision (an ns epoch needs ~61 mantissa
+  bits, a double has 52). See FIXTURES.md.
+- `scratch` / `fixture_tag` / `warehouse_path`: per-process scratch
+  paths under `<repo>/.tmp`, the fixture-dir tag used in scratch,
+  view, table and index names, and managed-table locations.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
+import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,8 +53,8 @@ class LRUDict(dict):
     """dict with a capacity bound: inserting past `cap` evicts the
     least-recently-USED entry (reads refresh recency). Round-12
     (VERDICT r11 issue 6): the module-level plan/view/query-vector
-    caches are keyed per (appId, sf_dir, mtime) and grew unbounded for
-    the process lifetime — harmless at gate scale, a leak in a
+    caches are keyed per (appId, sf_dir, fixture stamp) and grew
+    unbounded for the process lifetime — harmless at gate scale, a leak in a
     long-lived server that cycles fixture dirs. dict is insertion-
     ordered in CPython; move-to-end on hit makes eviction LRU."""
 
@@ -64,7 +83,8 @@ class LRUDict(dict):
             super().__delitem__(next(iter(self)))
 
 
-# (appId, sf_dir, table) -> analyzed DataFrame. spark.read.parquet
+# (appId, sf_dir, table, fixture_stamp) -> analyzed DataFrame; the
+# stamp drops a plan over a fixture rewritten in place. spark.read.parquet
 # costs a driver-side footer/schema pass per call (~100ms); repeated
 # query construction over the same fixture table (bench best-of-3,
 # multi-table joins) pays it every time without this. DataFrames are
@@ -94,29 +114,79 @@ _CONF_RECHECK_SEC = 30.0
 _CONFS_APPLIED_AT: dict[str, float] = {}
 
 
-def fixture_bytes(sf_dir: str, *tables: str) -> int:
-    """Driver-side on-disk size of fixture tables (file or directory
-    parquet) — the input to maybe_broadcast's size gate."""
-    import os
+# <repo>/.tmp: the one root every scratch path of the engine lives under
+SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
+)
 
+
+def _fixture_files(sf_dir: str, table: str) -> list[tuple[str, os.stat_result]]:
+    """(name, stat) of every file of one fixture table, sorted by name:
+    the parquet file itself, or each file of a directory-style table.
+    A missing table raises OSError."""
+    p = os.path.join(sf_dir, f"{table}.parquet")
+    if os.path.isdir(p):
+        return sorted((e.name, e.stat()) for e in os.scandir(p) if e.is_file())
+    return [(os.path.basename(p), os.stat(p))]
+
+
+def fixture_bytes(sf_dir: str, *tables: str) -> int:
+    """Driver-side on-disk size of fixture tables — the input to
+    maybe_broadcast's size gate and to streaming partition sizing. A
+    missing table counts 0 bytes, which keeps the broadcast gate shut."""
     total = 0
     for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
         try:
-            if os.path.isdir(p):
-                total += sum(
-                    e.stat().st_size for e in os.scandir(p) if e.is_file()
-                )
-            else:
-                total += os.path.getsize(p)
+            total += sum(st.st_size for _, st in _fixture_files(sf_dir, t))
         except OSError:
             pass
     return total
 
 
+def fixture_stamp(sf_dir: str, *tables: str) -> str:
+    """Change stamp of fixture tables, `name:size:mtime_ns` per file.
+    Rewriting a fixture in place changes it, so caches and persisted
+    indexes keyed on it rebuild instead of serving the old data."""
+    return "|".join(
+        f"{name}:{st.st_size}:{st.st_mtime_ns}"
+        for t in tables
+        for name, st in _fixture_files(sf_dir, t)
+    )
+
+
+def fixture_tag(sf_dir: str) -> str:
+    """Identifier-safe tag of a fixture dir: sanitised basename plus 8
+    hex digits of the path's md5, so `/a/sf0.01` and `/b/sf0.01` never
+    share a scratch path, view, table or index name."""
+    base = re.sub("[^0-9A-Za-z_]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    return f"{base}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+
+
+def scratch(name: str, sf_dir: str | None = None) -> str:
+    """Fresh scratch path `<repo>/.tmp/<name>[_<tag>]-<pid>`: anything
+    left there is removed and the root is created. The pid suffix keeps
+    two engine processes (e.g. a gate and a test run) from sharing a
+    path; a concurrent rmtree+rewrite under a reader shows up as a
+    FileNotFoundException mid-scan."""
+    if sf_dir is not None:
+        name = f"{name}_{fixture_tag(sf_dir)}"
+    path = os.path.join(SCRATCH_ROOT, f"{name}-{os.getpid()}")
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(SCRATCH_ROOT, exist_ok=True)
+    return path
+
+
+def warehouse_path(spark: SparkSession, table: str) -> str:
+    """Local path of `table` under spark.sql.warehouse.dir."""
+    from urllib.parse import urlparse
+
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    return os.path.join(warehouse, table)
+
+
 def maybe_broadcast(df: DataFrame, sf_dir: str, *tables: str) -> DataFrame:
-    """Size-gated broadcast hint (guide §3.1), shared form of the q5
-    `_maybe_broadcast` proven in round 11. A hard-coded F.broadcast on a
+    """Size-gated broadcast hint (guide §3.1), the gate proven on q5 in
+    round 11. A hard-coded F.broadcast on a
     frame derived from a table that SCALES with the corpus (customer,
     orders, supplier, part, lineitem, events, documents, embeddings) is
     the classic scale-killer: at 100 TB the forced build side exceeds
@@ -127,15 +197,32 @@ def maybe_broadcast(df: DataFrame, sf_dir: str, *tables: str) -> DataFrame:
     64 MB (SPARK_GRAFT_BCAST_MAX_BYTES overrides). Constant-cardinality
     dims (region, nation) and provably bounded aggregates keep their
     unconditional hints — see tests/test_guards_r12.py."""
-    import os
-
     limit = int(os.environ.get("SPARK_GRAFT_BCAST_MAX_BYTES", str(64 << 20)))
     src = fixture_bytes(sf_dir, *tables)
     return F.broadcast(df) if 0 < src <= limit else df
 
 
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """The one timestamp rule for fixture reads, batch or streaming.
+
+    A bigint `ts` is nanoseconds (an older timestamp[ns] fixture read
+    with nanosAsLong): integer-divide to microseconds, never float.
+    TIMESTAMP_NTZ columns (the shipped timestamp[us] fixtures, read by
+    a vanilla Spark 4 session with inferTimestampNTZ on) are cast to
+    TIMESTAMP: LTZ-only surfaces (unix_micros, watermarks) fail on NTZ
+    (CORRECTNESS_r02: q_sessionize, e_time_range_frames). The session
+    tz is pinned UTC by ensure_engine_confs, so the cast is the exact
+    naive-UTC reading DuckDB uses."""
+    for col, dtype in df.dtypes:
+        if col == "ts" and dtype == "bigint":
+            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        elif dtype == "timestamp_ntz":
+            df = df.withColumn(col, F.col(col).cast("timestamp"))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table; normalizes events.ts to TimestampType."""
+    """Load one fixture table, timestamps normalized (normalize_ts)."""
     import time
 
     app_id = spark.sparkContext.applicationId
@@ -143,24 +230,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if now - _CONFS_APPLIED_AT.get(app_id, -_CONF_RECHECK_SEC) >= _CONF_RECHECK_SEC:
         ensure_engine_confs(spark)
         _CONFS_APPLIED_AT[app_id] = now
-    key = (app_id, sf_dir, name)
+    key = (app_id, sf_dir, name, fixture_stamp(sf_dir, name))
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    # Fixtures regenerated as parquet timestamp[us] (naive) are read as
-    # TIMESTAMP_NTZ by a vanilla Spark 4 session (inferTimestampNTZ on
-    # by default); LTZ-only surfaces (unix_micros, watermarks) then fail
-    # (CORRECTNESS_r02: q_sessionize, e_time_range_frames). Session tz
-    # is pinned UTC by ensure_engine_confs above, so casting to
-    # TIMESTAMP here is the exact naive-UTC reading DuckDB uses — one
-    # normalization point, every query sees plain TIMESTAMP regardless
-    # of fixture vintage (ns-bigint, NTZ, or LTZ).
-    for col, dtype in df.dtypes:
-        if dtype == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
+    df = normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     _TABLE_CACHE[key] = df
     return df
 

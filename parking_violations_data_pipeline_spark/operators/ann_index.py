@@ -839,8 +839,8 @@ def build_once(path: str, build_fn, fingerprint: str | None = None) -> None:
     index. The sentinel closes that window: it exists only after the
     whole build_fn completed.)
 
-    `fingerprint` ties the build to its input corpus (e.g. fixture
-    mtime+size): a sentinel whose recorded fingerprint mismatches
+    `fingerprint` ties the build to its input corpus (e.g.
+    catalog.fixture_stamp): a sentinel whose recorded fingerprint mismatches
     triggers a rebuild under the lock, so a regenerated fixture can
     never be served results from a stale persisted index. The sentinel
     is removed before rebuilding — a crash mid-rebuild leaves no

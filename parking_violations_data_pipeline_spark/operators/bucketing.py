@@ -14,9 +14,10 @@ spark.sql.warehouse.dir; bucket metadata lives in the session catalog
 from __future__ import annotations
 
 import shutil
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+
+from parking_violations_data_pipeline_spark.catalog import warehouse_path
 
 
 def write_bucketed(
@@ -33,8 +34,7 @@ def write_bucketed(
         # the session catalog is in-memory but the warehouse dir persists:
         # clear a stale location left by a previous process or saveAsTable
         # fails with LOCATION_ALREADY_EXISTS
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        shutil.rmtree(f"{wh}/{table.lower()}", ignore_errors=True)
+        shutil.rmtree(warehouse_path(spark, table.lower()), ignore_errors=True)
     w = df.write.mode("overwrite").format("parquet").bucketBy(buckets, key)
     if sort:
         w = w.sortBy(key)

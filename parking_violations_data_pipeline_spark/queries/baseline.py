@@ -11,14 +11,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from parking_violations_data_pipeline_spark.catalog import load_table
+from parking_violations_data_pipeline_spark.catalog import (
+    LRUDict,
+    fixture_stamp,
+    fixture_tag,
+    load_table,
+    maybe_broadcast,
+)
 from parking_violations_data_pipeline_spark.functions.timeutil import epoch_us
 from parking_violations_data_pipeline_spark.registry import register
 
-from parking_violations_data_pipeline_spark.catalog import LRUDict
-
-# Query-vector cache for q_knn_cosine, keyed by (sf_dir, fixture mtime)
-# so a regenerated embeddings.parquet invalidates the cached literal
+# Query-vector cache for q_knn_cosine, keyed by (sf_dir, fixture stamp)
+# so a rewritten embeddings.parquet invalidates the cached literal
 # instead of silently serving the stale vector for the process
 # lifetime. LRU-capped (round 12, VERDICT r11 issue 6).
 _QV_CACHE: LRUDict = LRUDict(cap=32)
@@ -26,79 +30,27 @@ _QV_CACHE: LRUDict = LRUDict(cap=32)
 
 # per-table temp-view cache for the one-RPC spark.sql() build path
 # (q_word_count r10, q_events_hourly r11): view name per
-# (appId, sf_dir, table, mtime) so one spark.sql() build resolves
-# against the already-analyzed cached DataFrame (no per-build footer
-# re-read, no stale view after fixture regeneration). LRU-capped; the
-# orphaned temp view of an evicted entry is re-created (same name) on
-# the next build, so eviction costs one re-registration, never
+# (appId, sf_dir, table, fixture stamp) so one spark.sql() build
+# resolves against the already-analyzed cached DataFrame (no per-build
+# footer re-read, no stale view after a fixture rewrite). LRU-capped;
+# the orphaned temp view of an evicted entry is re-created (same name)
+# on the next build, so eviction costs one re-registration, never
 # staleness.
 _SQL_VIEWS: LRUDict = LRUDict(cap=64)
 
 
 def _sql_view(spark: SparkSession, sf_dir: str, table: str) -> str:
-    import hashlib
-    import os
-    import re
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isdir(path):
-            mtime = max(
-                (e.stat().st_mtime for e in os.scandir(path)),
-                default=os.path.getmtime(path),
-            )
-        else:
-            mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = 0.0
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, table, mtime)
+    key = (spark.sparkContext.applicationId, sf_dir, table, fixture_stamp(sf_dir, table))
     view = _SQL_VIEWS.get(key)
     if view is None:
-        # the view NAME must be a function of the FULL path, not just the
-        # basename: two fixture dirs sharing a basename (a/docs, b/docs)
-        # would otherwise overwrite each other's view while the cache —
-        # keyed on the full sf_dir — kept serving a hit against the
-        # wrong data (round-11 ADVICE). Short path-hash suffix breaks
-        # the collision.
-        view = f"hq_{table}_" + re.sub(
-            "[^0-9A-Za-z_]", "_", f"{sf_dir.rstrip('/').rsplit('/', 1)[-1]}"
-        ) + "_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+        # the view NAME is a function of the FULL path (fixture_tag), not
+        # just the basename: two fixture dirs sharing a basename (a/docs,
+        # b/docs) would otherwise overwrite each other's view while the
+        # cache kept serving a hit against the wrong data
+        view = f"hq_{table}_{fixture_tag(sf_dir)}"
         load_table(spark, sf_dir, table).createOrReplaceTempView(view)
         _SQL_VIEWS[key] = view
     return view
-
-
-# Size-gated broadcast (round-11 q5 proof, generalized package-wide in
-# round 12): see catalog.maybe_broadcast / catalog.fixture_bytes.
-from parking_violations_data_pipeline_spark.catalog import (  # noqa: E402
-    fixture_bytes as _fixture_bytes,
-)
-
-
-def _maybe_broadcast(df: DataFrame, src_bytes: int) -> DataFrame:
-    """Round-11 form kept for q5's call sites: gate on a precomputed
-    driver-side byte count (catalog.maybe_broadcast is the table-name
-    form used everywhere else)."""
-    import os
-
-    limit = int(os.environ.get("SPARK_GRAFT_BCAST_MAX_BYTES", str(64 << 20)))
-    return F.broadcast(df) if 0 < src_bytes <= limit else df
-
-
-def _embeddings_mtime(sf_dir: str) -> float:
-    import os
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        if os.path.isdir(path):
-            return max(
-                (e.stat().st_mtime for e in os.scandir(path)),
-                default=os.path.getmtime(path),
-            )
-        return os.path.getmtime(path)
-    except OSError:
-        return 0.0
 
 
 @register(
@@ -191,7 +143,7 @@ def q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(
-            _maybe_broadcast(c, _fixture_bytes(sf_dir, "customer")),
+            maybe_broadcast(c, sf_dir, "customer"),
             o.o_custkey == c.c_custkey,
         )
         .groupBy("o_orderkey", "o_orderdate")
@@ -239,7 +191,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # region/nation are constant-cardinality dims → unconditional hint;
     # customer/orders/supplier SCALE with the corpus → size-gated hint
-    # (_maybe_broadcast). The lineitem⋈od join is hinted on the od side
+    # (maybe_broadcast). The lineitem⋈od join is hinted on the od side
     # because Catalyst's static estimate inverts it: the pruned 4-column
     # lineitem scan estimates under the 10 MB auto-broadcast threshold
     # while the joined od side estimates huge, so the planner BUILT THE
@@ -251,13 +203,13 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     cd = c.join(F.broadcast(dim), c.c_nationkey == dim.n_nationkey).select(
         "c_custkey", "c_nationkey", "n_name"
     )
-    cd = _maybe_broadcast(cd, _fixture_bytes(sf_dir, "customer"))
+    cd = maybe_broadcast(cd, sf_dir, "customer")
     od = o.join(cd, o.o_custkey == cd.c_custkey).select(
         "o_orderkey", "c_nationkey", "n_name"
     )
-    od = _maybe_broadcast(od, _fixture_bytes(sf_dir, "orders", "customer"))
+    od = maybe_broadcast(od, sf_dir, "orders", "customer")
     j = li.join(od, li.l_orderkey == od.o_orderkey).join(
-        _maybe_broadcast(s, _fixture_bytes(sf_dir, "supplier")),
+        maybe_broadcast(s, sf_dir, "supplier"),
         (li.l_suppkey == s.s_suppkey) & (od.c_nationkey == s.s_nationkey),
     )
     from parking_violations_data_pipeline_spark.functions.money import sum_disc_price
@@ -434,7 +386,7 @@ def q_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained DataFrame calls (each a Py4J RPC, each taxed by gateway
     latency under box contention). Same logical plan, measured wall
     min 315→187 ms on a contended box. The view is registered once
-    per (appId, sf_dir, fixture-mtime) — regenerated fixtures
+    per (appId, sf_dir, fixture stamp) — rewritten fixtures
     invalidate it, mirroring _QV_CACHE."""
     view = _sql_view(spark, sf_dir, "documents")
     return spark.sql(
@@ -474,7 +426,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     # query vector is a plan-time parameter: fold it as a literal array
     # (no join stage at all — the scan streams straight into TakeOrdered)
-    cache_key = (sf_dir, _embeddings_mtime(sf_dir))
+    cache_key = (sf_dir, fixture_stamp(sf_dir, "embeddings"))
     if cache_key not in _QV_CACHE:
         row = e.filter(F.col("vec_id") == 0).select("embedding").head()
         # missing/NULL query vector → NULL literal, so sims are NULL

@@ -13,33 +13,17 @@ value-hash.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.catalog import maybe_broadcast
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.plans import etl
 from parking_violations_data_pipeline_spark.functions.localrel import local_df
 from parking_violations_data_pipeline_spark.registry import register
 from parking_violations_data_pipeline_spark.sources import readers, writers
-
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp")
-
-
-def _scratch(name: str) -> str:
-    # per-process suffix: two engine sessions (e.g. the driver gate and
-    # a pytest run) must never share scratch paths — a concurrent
-    # rmtree+rewrite under a reader manifests as FileNotFoundException
-    # mid-scan (measured when gate and suite ran simultaneously)
-    path = os.path.join(_SCRATCH, f"{name}-{os.getpid()}")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(_SCRATCH, exist_ok=True)
-    return path
-
 
 _CLEAN_SQL = """
   SELECT event_id AS ticket_number, CAST(ts AS TIMESTAMP) AS issue_datetime,
@@ -210,7 +194,7 @@ def etl_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5→A2: publish filtered orders to CSV, re-ingest with an explicit
     schema, aggregate. The oracle aggregates the source directly — any
     loss in the write/parse round trip breaks the hash."""
-    path = _scratch("csv_roundtrip")
+    path = scratch("csv_roundtrip")
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
     )
@@ -248,7 +232,7 @@ def etl_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5→A1: write orders hive-partitioned by year (the 100-TB layout:
     date-partitioned output enables static+dynamic partition pruning for
     every downstream scan), re-read, aggregate per partition."""
-    path = _scratch("parquet_partitioned")
+    path = scratch("parquet_partitioned")
     o = load_table(spark, sf_dir, "orders").withColumn(
         "yr", F.year("o_orderdate")
     )
@@ -276,7 +260,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 def etl_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5→A3: export events as JSON-lines, re-ingest with explicit
     schema, extract the nested metric — semi-structured round trip."""
-    path = _scratch("jsonl_roundtrip")
+    path = scratch("jsonl_roundtrip")
     e = load_table(spark, sf_dir, "events").select("event_id", "event_type", "props")
     e.write.mode("overwrite").json(path)
     schema = T.StructType(
@@ -315,7 +299,7 @@ def etl_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     DB as a WHERE clause — JDBCRelation pushes predicates), and
     aggregate. Oracle runs the same relational query on the parquet
     source, proving the DB round trip preserved every row."""
-    url = f"jdbc:derby:{_scratch('derby_a4')};create=true"
+    url = f"jdbc:derby:{scratch('derby_a4')};create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     n = load_table(spark, sf_dir, "nation")
     (

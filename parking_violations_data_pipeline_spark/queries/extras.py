@@ -13,35 +13,14 @@ evolution case every long-lived table hits).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from parking_violations_data_pipeline_spark.catalog import load_table
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.functions.timeutil import epoch_us
 from parking_violations_data_pipeline_spark.registry import register
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp"
-)
-
-
-def _scratch(name: str, sf_dir: str) -> str:
-    import re as _re
-
-    # sanitized: non-sf fixture dirs must not inject path separators
-    tag = _re.sub(
-        "[^0-9A-Za-z_]", "_",
-        sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_"),
-    )
-    path = os.path.join(_SCRATCH, f"{name}_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(_SCRATCH, exist_ok=True)
-    return path
-
 
 @register(
     "e_gap_islands",
@@ -386,7 +365,7 @@ def etl_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     operation instead of a table rewrite; the per-file schemas come
     from parquet footers, so the merge cost is footers-only.
     """
-    path = _scratch("schema_evo", sf_dir)
+    path = scratch("schema_evo", sf_dir)
     e = load_table(spark, sf_dir, "events").select("event_id", "value", "event_type")
     v1 = e.filter(F.col("event_id") % 2 == 0).select("event_id", "value")
     v2 = e.filter(F.col("event_id") % 2 == 1)

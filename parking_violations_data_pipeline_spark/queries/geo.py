@@ -37,6 +37,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parking_violations_data_pipeline_spark.catalog import fixture_bytes
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.functions.localrel import local_df
 from parking_violations_data_pipeline_spark.registry import register
@@ -1154,7 +1155,7 @@ def s_geofence_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         jobs.run_available_now(
-            agg, "complete", src_bytes=jobs.source_bytes(sf_dir)
+            agg, "complete", src_bytes=fixture_bytes(sf_dir, "events")
         )
         .select(
             "box_id",

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parking_violations_data_pipeline_spark.catalog import load_table
+from parking_violations_data_pipeline_spark.catalog import fixture_tag, load_table
 from parking_violations_data_pipeline_spark.operators import bucketing as BK
 from parking_violations_data_pipeline_spark.operators import similarity as S
 from parking_violations_data_pipeline_spark.registry import register
@@ -30,14 +30,7 @@ def c_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange and no Sort (asserted in test_plans): the write-time
     shuffle is amortized across every later join on the key. Identical
     results to the plain join (the oracle)."""
-    import re as _re
-
-    # sanitize to identifier chars: non-sf fixture dirs (e.g. the
-    # adversarial variants) would otherwise inject '/' into the name
-    tag = _re.sub(
-        "[^0-9A-Za-z_]", "_",
-        sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_"),
-    )
+    tag = fixture_tag(sf_dir)
     lt, rt = f"orders_b_{tag}", f"lineitem_b_{tag}"
     if not spark.catalog.tableExists(lt):
         BK.write_bucketed(

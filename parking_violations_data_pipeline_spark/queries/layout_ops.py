@@ -16,33 +16,12 @@ the DuckDB oracle reproduces from the source tables + literals.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp"
-)
-
-
-def _scratch(name: str, sf_dir: str) -> str:
-    import re as _re
-
-    # sanitized: non-sf fixture dirs must not inject path separators
-    tag = _re.sub(
-        "[^0-9A-Za-z_]", "_",
-        sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_"),
-    )
-    path = os.path.join(_SCRATCH, f"{name}_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(_SCRATCH, exist_ok=True)
-    return path
-
 
 @register(
     "etl_partition_overwrite",
@@ -76,7 +55,7 @@ def etl_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rest untouched (and partition pruning keeps the re-read scan
     on the touched partition only).
     """
-    path = _scratch("part_overwrite", sf_dir)
+    path = scratch("part_overwrite", sf_dir)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderstatus")
     o.write.partitionBy("o_orderstatus").mode("overwrite").parquet(path)
     backfill = o.filter(
@@ -121,8 +100,8 @@ def etl_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filesystem). At 100 TB the same job runs per partition with a
     target of files x maxPartitionBytes ≈ partition size.
     """
-    small = _scratch("compact_small", sf_dir)
-    compacted = _scratch("compact_big", sf_dir)
+    small = scratch("compact_small", sf_dir)
+    compacted = scratch("compact_big", sf_dir)
     e = load_table(spark, sf_dir, "events").select("event_id", "value")
     e.repartition(64).write.mode("overwrite").parquet(small)
     before = spark.read.schema(e.schema).parquet(small)
@@ -168,7 +147,7 @@ def etl_sorted_write_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     loss. The overlap self-join runs on n_files rows — trivial at any
     scale.
     """
-    path = _scratch("sorted_write", sf_dir)
+    path = scratch("sorted_write", sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     (
         li.repartitionByRange(8, "l_orderkey")

@@ -298,9 +298,10 @@ def j_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# LRU-capped (round 12, VERDICT r11 issue 6): bounded for long-lived
-# servers cycling many fixture dirs.
-from parking_violations_data_pipeline_spark.catalog import LRUDict
+# Query-vector cache for j_hybrid_search, keyed by (sf_dir, fixture
+# stamp) like baseline._QV_CACHE. LRU-capped (round 12, VERDICT r11
+# issue 6): bounded for long-lived servers cycling many fixture dirs.
+from parking_violations_data_pipeline_spark.catalog import LRUDict, fixture_stamp
 
 _HY_QV_CACHE: LRUDict = LRUDict(cap=32)
 
@@ -373,14 +374,15 @@ def j_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "rl")
     )
-    if sf_dir not in _HY_QV_CACHE:
+    cache_key = (sf_dir, fixture_stamp(sf_dir, "embeddings"))
+    if cache_key not in _HY_QV_CACHE:
         row = e.filter(F.col("vec_id") == 0).select("embedding").head()
-        _HY_QV_CACHE[sf_dir] = (
+        _HY_QV_CACHE[cache_key] = (
             [float(x) for x in row["embedding"]]
             if row and row["embedding"] is not None
             else [0.0] * 64
         )
-    qv = F.array(*[F.lit(x) for x in _HY_QV_CACHE[sf_dir]])
+    qv = F.array(*[F.lit(x) for x in _HY_QV_CACHE[cache_key]])
     vrank = (
         e.select(
             F.col("vec_id").alias("doc_id"),

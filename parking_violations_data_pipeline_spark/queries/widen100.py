@@ -6,11 +6,11 @@ against the batch answer.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.functions.localrel import local_df
 from parking_violations_data_pipeline_spark.registry import register
 from parking_violations_data_pipeline_spark.streaming import jobs
@@ -47,8 +47,7 @@ def s_stream_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("value") <= 0, 1)).alias("nonpos"),
     )
     name = f"s_observe_{os.getpid()}"
-    ckpt = os.path.join(jobs._SCRATCH, f"ckpt_{name}")
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = scratch(f"ckpt_{name}")
     q = (
         observed.writeStream.format("noop")
         .option("checkpointLocation", ckpt)

@@ -7,13 +7,12 @@ DELETE.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -47,8 +46,7 @@ def etl_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletes cheap (no rewrite) and time travel trivial (drop the
     vector to read the old version). A physical-rewrite compaction
     (gdpr_erasure's shape) subsumes the vector later."""
-    root = _scratch("deletion_vectors")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch("deletion_vectors")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     base_path = os.path.join(root, "base")
     # Per-file addressing, exactly as Delta/Iceberg store it: each

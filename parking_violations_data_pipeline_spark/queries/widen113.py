@@ -7,14 +7,13 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.functions.timeutil import epoch_us
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.functions.localrel import local_df
 from parking_violations_data_pipeline_spark.registry import register
 
@@ -44,8 +43,7 @@ def etl_orphan_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     files hold orderkey%4==0; two orphan files (other residues) are
     planted; the in-plan booleans prove orphans existed and the
     post-GC read equals the pre-GC read."""
-    root = _scratch("orphan_gc")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch("orphan_gc")
     data = os.path.join(root, "data")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     committed_dir = os.path.join(data, "committed")

@@ -6,14 +6,15 @@ date-partitioned streaming file sink.
 from __future__ import annotations
 
 import os
-import shutil
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from parking_violations_data_pipeline_spark.catalog import fixture_bytes
 from parking_violations_data_pipeline_spark.catalog import load_table
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -110,10 +111,8 @@ def s_stream_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract)."""
     from parking_violations_data_pipeline_spark.streaming import jobs
 
-    out_dir = os.path.join(jobs._SCRATCH, f"stream_part_out_{os.getpid()}")
-    ckpt = os.path.join(jobs._SCRATCH, f"ckpt_stream_part_{os.getpid()}")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out_dir = scratch("stream_part_out")
+    ckpt = scratch("ckpt_stream_part")
     s = (
         jobs.events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -124,7 +123,7 @@ def s_stream_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     with jobs._stream_conf(
-        spark, jobs.stream_partitions(jobs.source_bytes(sf_dir))
+        spark, jobs.stream_partitions(fixture_bytes(sf_dir, "events"))
     ):
         q = (
             s.writeStream.format("parquet")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -80,7 +80,7 @@ def a_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_python_datasource(spark, AvroDataSource)
-    path = _scratch("avro_roundtrip")
+    path = scratch("avro_roundtrip")
 
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("priority"),

@@ -19,47 +19,18 @@ brute-force top-k IN PLAN and returns a boolean the oracle reproduces.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parking_violations_data_pipeline_spark.catalog import load_table
+from parking_violations_data_pipeline_spark.catalog import (
+    fixture_stamp,
+    fixture_tag,
+    load_table,
+    warehouse_path,
+)
 from parking_violations_data_pipeline_spark.operators import ann_index as AI
 from parking_violations_data_pipeline_spark.operators import similarity as S
 from parking_violations_data_pipeline_spark.registry import register
-
-
-def _warehouse(spark: SparkSession) -> str:
-    from urllib.parse import urlparse
-
-    return urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-
-
-def _tag(sf_dir: str) -> str:
-    return re.sub(
-        "[^0-9A-Za-z_]", "_",
-        sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_"),
-    )
-
-
-def _fingerprint(sf_dir: str) -> str:
-    """Corpus fingerprint for build_once: mtime_ns + size of the
-    embeddings fixture (file, or every file of a directory-style
-    parquet). A regenerated fixture under the SAME directory name
-    (scripts/gen_adversarial.py rewrites fixtures_adv/*) changes the
-    fingerprint, so a stale persisted index in the warehouse is
-    rebuilt instead of silently serving the old corpus."""
-    import os
-
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    if os.path.isdir(p):
-        parts = sorted(
-            (f, os.stat(os.path.join(p, f))) for f in os.listdir(p)
-        )
-        return "|".join(f"{f}:{s.st_size}:{s.st_mtime_ns}" for f, s in parts)
-    s = os.stat(p)
-    return f"{s.st_size}:{s.st_mtime_ns}"
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
@@ -88,11 +59,11 @@ def j_ann_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan's input files all lie under the probed list_id= dirs)."""
     e = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
-    path = f"{_warehouse(spark)}/annidx_ivf_{_tag(sf_dir)}"
+    path = warehouse_path(spark, f"annidx_ivf_{fixture_tag(sf_dir)}")
     AI.build_once(
         path,
         lambda: AI.ann_index_write(e, path, mode="ivf", n_lists=16),
-        fingerprint=_fingerprint(sf_dir),
+        fingerprint=fixture_stamp(sf_dir, "embeddings"),
     )
     ann = AI.ann_index_query(spark, path, qv, k=10).select(
         "vec_id", F.lit(1).alias("hit")
@@ -119,11 +90,11 @@ def j_pq_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales)."""
     e = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
-    path = f"{_warehouse(spark)}/annidx_pq_{_tag(sf_dir)}"
+    path = warehouse_path(spark, f"annidx_pq_{fixture_tag(sf_dir)}")
     AI.build_once(
         path,
         lambda: AI.pq_index_write(e, path, m=8, n_codes=16),
-        fingerprint=_fingerprint(sf_dir),
+        fingerprint=fixture_stamp(sf_dir, "embeddings"),
     )
     pq = AI.pq_index_query(spark, path, qv, k=10, shortlist=100).select(
         "vec_id", F.lit(1).alias("hit")
@@ -181,7 +152,7 @@ def j_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     (The pruned-probe path is gated by j_ann_index_query.)"""
     e = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
-    path = f"{_warehouse(spark)}/annidx_app_{_tag(sf_dir)}"
+    path = warehouse_path(spark, f"annidx_app_{fixture_tag(sf_dir)}")
 
     def build() -> None:
         AI.ann_index_write(
@@ -189,6 +160,6 @@ def j_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         AI.ann_index_append(e.filter(F.col("vec_id") % 2 == 1), path)
 
-    AI.build_once(path, build, fingerprint=_fingerprint(sf_dir))
+    AI.build_once(path, build, fingerprint=fixture_stamp(sf_dir, "embeddings"))
     # n_probe=8 == every list: exact by construction
     return AI.ann_index_query(spark, path, qv, k=10, n_probe=8)

@@ -10,27 +10,13 @@ tie-breaks, no array-typed output columns.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.catalog import maybe_broadcast
 from parking_violations_data_pipeline_spark.registry import register
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp"
-)
-
-
-def _scratch(name: str) -> str:
-    path = os.path.join(_SCRATCH, name)
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(_SCRATCH, exist_ok=True)
-    return path
-
 
 @register(
     "etl_gdpr_erasure",
@@ -75,7 +61,7 @@ def etl_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     req = e.filter(F.col("user_id") % 13 == 0).select("user_id").distinct()
     n_before = e.count()
     n_requested = req.count()
-    out = _scratch("gdpr_erasure")
+    out = scratch("gdpr_erasure")
     e.join(maybe_broadcast(req, sf_dir, "events"), "user_id", "left_anti").write.mode(
         "overwrite"
     ).parquet(out)

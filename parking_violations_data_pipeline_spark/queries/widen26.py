@@ -6,15 +6,12 @@ shift — integer-exact throughout.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.catalog import maybe_broadcast
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -120,7 +117,7 @@ def a_file_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (regexp over the hive dir name), not from a data column — that's
     the lineage surface being exercised.
     """
-    path = _scratch("file_metadata_audit")
+    path = scratch("file_metadata_audit")
     o = load_table(spark, sf_dir, "orders")
     (
         o.repartition(5, "o_orderpriority")

@@ -14,9 +14,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parking_violations_data_pipeline_spark.catalog import fixture_bytes
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.functions.timeutil import epoch_us
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 from parking_violations_data_pipeline_spark.streaming import jobs
 
@@ -51,7 +52,7 @@ def etl_retention_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     shouldn't — the GDPR-erasure twin at partition grain
     (etl_gdpr_erasure is the row-grain version).
     """
-    path = _scratch("retention_prune")
+    path = scratch("retention_prune")
     e = load_table(spark, sf_dir, "events").select(
         epoch_us("ts").alias("us"),
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
@@ -99,9 +100,8 @@ def s_exactly_once_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     row). This is the operational property that makes streaming jobs
     safe to re-run after a crash or deploy.
     """
-    out_dir = _scratch("exactly_once_out")
-    ckpt = os.path.join(os.path.dirname(out_dir), "ckpt_exactly_once")
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out_dir = scratch("exactly_once_out")
+    ckpt = scratch("ckpt_exactly_once")
 
     def run_once() -> None:
         s = jobs.events_stream(spark, sf_dir).select(
@@ -109,7 +109,7 @@ def s_exactly_once_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
         )
         with jobs._stream_conf(
-            spark, jobs.stream_partitions(jobs.source_bytes(sf_dir))
+            spark, jobs.stream_partitions(fixture_bytes(sf_dir, "events"))
         ):
             q = (
                 s.writeStream.format("parquet")
@@ -164,7 +164,7 @@ def a_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parking_violations_data_pipeline_spark.sources.pyds import (
         save_python_datasource,
     )
-    path = _scratch("pyds_ledger_out")
+    path = scratch("pyds_ledger_out")
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("priority"),
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),

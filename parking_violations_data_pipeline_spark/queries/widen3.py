@@ -1181,10 +1181,10 @@ def etl_bad_record_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from parking_violations_data_pipeline_spark.queries.etl import _scratch
+    from parking_violations_data_pipeline_spark.catalog import scratch
     from pyspark.sql import types as T
 
-    path = _scratch("bad_record_quarantine")
+    path = scratch("bad_record_quarantine")
     o = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     line = F.concat_ws(

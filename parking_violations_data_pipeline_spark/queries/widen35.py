@@ -12,12 +12,13 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parking_violations_data_pipeline_spark.catalog import fixture_bytes
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.catalog import maybe_broadcast
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 from parking_violations_data_pipeline_spark.streaming import jobs
-from parking_violations_data_pipeline_spark.streaming.jobs import run_available_now, source_bytes
+from parking_violations_data_pipeline_spark.streaming.jobs import run_available_now
 
 
 @register(
@@ -208,8 +209,7 @@ def s_chunked_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # oracle filters the same rows
         .filter(jobs.admissible_event_time("ts"))
     )
-    chunk_dir = _scratch("chunked_replay_src")
-    shutil.rmtree(chunk_dir, ignore_errors=True)
+    chunk_dir = scratch("chunked_replay_src")
     # Time-quartile sharding WITHOUT a global sort: the round-4
     # `ntile(4) over (order by ts, event_id)` ran the whole table
     # through ONE window task (the 4.9x-at-100x row in SCALE_SMOKE
@@ -245,8 +245,7 @@ def s_chunked_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("overwrite")
         .parquet(chunk_dir)
     )
-    flat_dir = _scratch("chunked_replay_flat")
-    shutil.rmtree(flat_dir, ignore_errors=True)
+    flat_dir = scratch("chunked_replay_flat")
     os.makedirs(flat_dir, exist_ok=True)
     for k in range(1, 5):
         stage = os.path.join(chunk_dir, f"chunk={k}")
@@ -295,7 +294,7 @@ def s_chunked_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("h"), "event_type", "cnt", "cents")
     )
-    out = run_available_now(agg, "update", src_bytes=source_bytes(sf_dir))
+    out = run_available_now(agg, "update", src_bytes=fixture_bytes(sf_dir, "events"))
     # update mode re-emits a window each time it grows; the final
     # (largest-cnt) emission per (h, type) is the completed window
     final = out.groupBy("h", "event_type").agg(

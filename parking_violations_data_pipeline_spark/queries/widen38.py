@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.functions.localrel import local_df
 from parking_violations_data_pipeline_spark.registry import register
 
@@ -275,8 +275,8 @@ def etl_schema_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the footer schemas.
     """
     e = load_table(spark, sf_dir, "events")
-    p1 = _scratch("drift_v1")
-    p2 = _scratch("drift_v2")
+    p1 = scratch("drift_v1")
+    p2 = scratch("drift_v2")
     e.select(
         "event_id", "user_id", F.round(F.col("value") * 100, 0).cast("long").alias("cents")
     ).limit(100).write.mode("overwrite").parquet(p1)

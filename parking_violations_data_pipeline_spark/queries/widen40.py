@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.functions.localrel import local_df
 from parking_violations_data_pipeline_spark.registry import register
 
@@ -150,7 +150,7 @@ def a_csv_parse_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts; the corruption pattern is deterministic so they are
     reproducible, not fixtures of luck.
     """
-    path = _scratch("csv_modes")
+    path = scratch("csv_modes")
     os.makedirs(path, exist_ok=True)
     lines = ["id,amount"]
     for i in range(100):

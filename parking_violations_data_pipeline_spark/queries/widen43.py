@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.functions.timeutil import epoch_us
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -173,7 +173,7 @@ def etl_reconciliation_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src_digest = digests(o)
-    path = _scratch("reconciliation_copy")
+    path = scratch("reconciliation_copy")
     o.repartition(8).write.mode("overwrite").parquet(path)
     tgt = spark.read.parquet(path)
     tgt_digest = digests(tgt).select(

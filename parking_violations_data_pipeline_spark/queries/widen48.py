@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.functions.timeutil import epoch_us
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -107,7 +107,7 @@ def a_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read ORC, which is exactly why the proof routes through
     aggregate equality instead of file-level diffing.
     """
-    path = _scratch("orc_roundtrip")
+    path = scratch("orc_roundtrip")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),

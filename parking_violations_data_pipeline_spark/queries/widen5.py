@@ -18,34 +18,13 @@ total-order tie-breaks, no array-typed output columns.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.catalog import maybe_broadcast
 from parking_violations_data_pipeline_spark.registry import register
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp"
-)
-
-
-def _scratch(name: str, sf_dir: str) -> str:
-    import re as _re
-
-    # sanitized: non-sf fixture dirs must not inject path separators
-    tag = _re.sub(
-        "[^0-9A-Za-z_]", "_",
-        sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_"),
-    )
-    path = os.path.join(_SCRATCH, f"{name}_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(_SCRATCH, exist_ok=True)
-    return path
-
 
 @register(
     "c_dpp_partition_pruned_join",
@@ -79,7 +58,7 @@ def c_dpp_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the re-read scan. The oracle checks the logical join result, which
     must be byte-equal regardless of pruning.
     """
-    path = _scratch("dpp_fact", sf_dir)
+    path = scratch("dpp_fact", sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_extendedprice"
     )
@@ -166,7 +145,7 @@ def etl_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max (one tiny broadcast agg); bit math is integer-exact on
     both engines.
     """
-    path = _scratch("zorder", sf_dir)
+    path = scratch("zorder", sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     bounds = F.broadcast(
         li.agg(

@@ -12,8 +12,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parking_violations_data_pipeline_spark.catalog import fixture_bytes
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -182,7 +183,7 @@ def s_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # to the oracle's (Spark sorts NULLS FIRST, DuckDB LAST)
         .filter(F.col("ts").isNotNull())
     )
-    chunk_dir = _scratch("late_drop_src")
+    chunk_dir = scratch("late_drop_src")
     q = src.selectExpr("*", "ntile(4) over (order by ts, event_id) as qt")
     for k in range(1, 5):
         (
@@ -192,7 +193,7 @@ def s_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(os.path.join(chunk_dir, f"stage-{k}"))
         )
-    flat_dir = _scratch("late_drop_flat")
+    flat_dir = scratch("late_drop_flat")
     os.makedirs(flat_dir, exist_ok=True)
     for k in range(1, 5):
         stage = os.path.join(chunk_dir, f"stage-{k}")
@@ -218,9 +219,9 @@ def s_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("h"), "event_type", "cnt", "cents")
     )
-    from parking_violations_data_pipeline_spark.streaming.jobs import run_available_now, source_bytes
+    from parking_violations_data_pipeline_spark.streaming.jobs import run_available_now
 
-    out = run_available_now(agg, "update", src_bytes=source_bytes(sf_dir))
+    out = run_available_now(agg, "update", src_bytes=fixture_bytes(sf_dir, "events"))
     final = out.groupBy("h", "event_type").agg(
         F.max("cnt").alias("cnt"), F.max_by("cents", "cnt").alias("cents")
     )

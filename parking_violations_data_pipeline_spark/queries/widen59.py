@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.functions.localrel import local_df
 from parking_violations_data_pipeline_spark.registry import register
 from parking_violations_data_pipeline_spark.streaming.jobs import run_available_now
@@ -43,7 +43,7 @@ def a_json_schema_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     loaders lean on these rules implicitly; pinning them as data
     turns a silent engine-upgrade change into a red row.
     """
-    path = _scratch("json_infer")
+    path = scratch("json_infer")
     os.makedirs(path, exist_ok=True)
     lines = [
         '{"id": 1, "amount": 10, "active": true, "name": "a", "tags": "x"}',
@@ -115,11 +115,9 @@ def a_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps triggering until offsets stop advancing, which is the
     # correct drain for an offset-generating source
     import os as _os
-    import shutil as _shutil
 
     name = f"pyds_stream_{_os.getpid()}"
-    ckpt = _scratch(f"ckpt_{name}")
-    _shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = scratch(f"ckpt_{name}")
     q = (
         s.writeStream.format("memory")
         .queryName(name)

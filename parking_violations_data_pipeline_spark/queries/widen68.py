@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.functions.timeutil import epoch_us
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.functions.localrel import local_df
 from parking_violations_data_pipeline_spark.registry import register
 
@@ -137,7 +137,7 @@ def a_csv_quoting_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         (5, "trailing space "),
     ]
     src = local_df(spark, values, "id long, content string")
-    path = _scratch("csv_quoting")
+    path = scratch("csv_quoting")
     (
         src.coalesce(1)
         .write.mode("overwrite")

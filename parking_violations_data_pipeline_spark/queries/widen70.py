@@ -6,13 +6,12 @@ input row (the monitoring surface operators alert on).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.functions.localrel import local_df
 from parking_violations_data_pipeline_spark.registry import register
 from parking_violations_data_pipeline_spark.streaming import jobs
@@ -41,8 +40,7 @@ def s_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     s = jobs.events_stream(spark, sf_dir).select("event_id", "event_type")
     name = f"progress_probe_{os.getpid()}"
-    ckpt = _scratch(f"ckpt_{name}")
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = scratch(f"ckpt_{name}")
     q = (
         s.writeStream.format("memory")
         .queryName(name)

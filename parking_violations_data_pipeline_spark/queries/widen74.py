@@ -6,13 +6,12 @@ encryption round-trip, and recursive/glob file-lookup read options.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -51,8 +50,7 @@ def a_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("text").alias("text"))
         .collect()  # bounded: at most 5 rows, written as local blobs
     )
-    path = _scratch("binary_files")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch("binary_files")
     os.makedirs(path, exist_ok=True)
     for row in docs:
         with open(os.path.join(path, f"doc_{row['doc_id']:05d}.txt"), "wb") as f:
@@ -130,8 +128,7 @@ def a_path_glob_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums must reproduce the source table exactly. Scale note: file
     listing is driver-parallelized (InMemoryFileIndex) and the glob
     prunes before any footer read."""
-    path = _scratch("glob_recursive")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch("glob_recursive")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     d.write.mode("overwrite").partitionBy("lang").parquet(path)
     # decoy sidecars that the glob must skip

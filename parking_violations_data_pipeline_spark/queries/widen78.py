@@ -17,22 +17,13 @@ from parking_violations_data_pipeline_spark.registry import register
 def _orders_rowcount(sf_dir: str) -> int:
     """Driver-side row count from the parquet footer(s) — no Spark job.
     Sizes the cogroup bucket count to the corpus (guide §2.5: synthetic
-    partitioning keys must track the data, not a constant)."""
+    partitioning keys must track the data, not a constant). A missing
+    fixture raises OSError."""
     import os
 
-    import pyarrow.parquet as pq
+    import pyarrow.dataset as ds
 
-    p = os.path.join(sf_dir, "orders.parquet")
-    try:
-        if os.path.isdir(p):
-            return sum(
-                pq.ParquetFile(os.path.join(p, f)).metadata.num_rows
-                for f in os.listdir(p)
-                if f.endswith(".parquet")
-            )
-        return pq.ParquetFile(p).metadata.num_rows
-    except Exception:
-        return 0
+    return ds.dataset(os.path.join(sf_dir, "orders.parquet"), format="parquet").count_rows()
 
 
 @register(

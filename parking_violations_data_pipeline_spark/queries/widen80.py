@@ -7,13 +7,12 @@ and parquet codec control with footer-level proof.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -168,8 +167,7 @@ def a_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     out: list[DataFrame] = []
     for codec in ("snappy", "zstd"):
-        path = _scratch(f"codec_{codec}")
-        shutil.rmtree(path, ignore_errors=True)
+        path = scratch(f"codec_{codec}")
         o.write.mode("overwrite").option("compression", codec).parquet(path)
         # footer proof: every column chunk of every part file reports
         # the requested codec (bounded: file count, not row count)

@@ -7,14 +7,14 @@ streaming sink (DataStreamWriter.toTable).
 from __future__ import annotations
 
 import os
-
-from urllib.parse import urlparse
+import shutil
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
+from parking_violations_data_pipeline_spark.catalog import scratch, warehouse_path
 from parking_violations_data_pipeline_spark.operators import similarity as S
 from parking_violations_data_pipeline_spark.functions.localrel import local_df
 from parking_violations_data_pipeline_spark.registry import register
@@ -166,21 +166,14 @@ def s_stream_table_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parking_violations_data_pipeline_spark.streaming import jobs
 
     tbl = f"stream_tbl_sink_{os.getpid()}"
-    ckpt = os.path.join(jobs._SCRATCH, f"ckpt_{tbl}")
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = scratch(f"ckpt_{tbl}")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     # DROP only reaps locations the CURRENT catalog knows about; a
     # stale spark-warehouse/<tbl> directory from a crashed earlier
     # process with a RECYCLED pid survives it, and toTable then fails
     # LOCATION_ALREADY_EXISTS (flushed by the round-8 engine-stability
     # run-pair harness). Remove the physical location explicitly.
-    try:
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
-    except Exception:
-        pass
+    shutil.rmtree(warehouse_path(spark, tbl), ignore_errors=True)
     s = (
         jobs.events_stream(spark, sf_dir)
         .filter(F.col("value") > 0)

@@ -7,13 +7,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -45,8 +44,7 @@ def a_time_travel_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolation by construction. The oracle recomputes both versions
     from the source predicate."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = _scratch("time_travel")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch("time_travel")
     data = os.path.join(root, "data")
     # commit v1: files for orderkey % 3 == 0
     v1_dir = os.path.join(data, "batch_v1")

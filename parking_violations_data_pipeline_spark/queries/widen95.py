@@ -5,13 +5,11 @@ built-in — no external package) and the XML expression family
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -34,8 +32,7 @@ def a_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     B2B/EDI feeds still arrive — the ingest path matters even when
     the lake is parquet. Write is distributed (one XML file per
     partition); the reader splits per rowTag."""
-    path = _scratch("xml_roundtrip")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch("xml_roundtrip")
     o = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 2000)

@@ -6,13 +6,12 @@ banker's bround) pinned cross-engine.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
-from parking_violations_data_pipeline_spark.queries.etl import _scratch
+from parking_violations_data_pipeline_spark.catalog import scratch
 from parking_violations_data_pipeline_spark.registry import register
 
 
@@ -35,8 +34,7 @@ def a_corrupt_file_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the FILE-granular sibling of etl_bad_record_quarantine's
     ROW-granular PERMISSIVE mode. The honesty check: without the
     option the same read raises — asserted in-plan before returning."""
-    path = _scratch("corrupt_skip")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch("corrupt_skip")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 4000)
     o.select("o_orderkey", "o_totalprice").repartition(2).write.mode(
         "overwrite"

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from parking_violations_data_pipeline_spark.catalog import fixture_bytes
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.functions.timeutil import epoch_us
 from parking_violations_data_pipeline_spark.functions.vector import cosine_sim
@@ -240,7 +241,7 @@ def s_append_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count("*").alias("cnt")
     )
-    out = jobs.run_available_now(agg, "append", src_bytes=jobs.source_bytes(sf_dir))
+    out = jobs.run_available_now(agg, "append", src_bytes=fixture_bytes(sf_dir, "events"))
     emitted = out.select(F.col("w.start").alias("h"), "event_type", "cnt")
 
     e = load_table(spark, sf_dir, "events")

@@ -18,18 +18,26 @@ import contextlib
 import itertools
 import math
 import os
-import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from parking_violations_data_pipeline_spark.catalog import (
+    fixture_bytes,
+    normalize_ts,
+    scratch,
+)
 from parking_violations_data_pipeline_spark.functions.localrel import local_df
 from pyspark.sql import types as T
 
 _counter = itertools.count()
 
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp"
-)
+# sf_dir -> staged stream source dir, cleared and linked once per
+# process. A checkpoint records its source path, so a restarted query
+# must see the same dir; and clearing it per call would pull it from
+# under a stream another thread is draining.
+_STREAM_SRC: dict[str, str] = {}
+_STREAM_SRC_LOCK = threading.Lock()
 
 EVENTS_RAW_SCHEMA = T.StructType(
     [
@@ -45,8 +53,8 @@ EVENTS_RAW_SCHEMA = T.StructType(
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 streaming source: the events table as an unbounded stream.
-    Same ns→µs normalization as the batch catalog so stream and batch
-    plans see identical timestamps.
+    Same timestamp rule as the batch catalog (catalog.normalize_ts) so
+    stream and batch plans see identical timestamps.
 
     The file source requires a DIRECTORY (new files appear over time);
     the fixture is a single file, so we stage a symlink to it in a
@@ -56,53 +64,25 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_engine_confs(spark)
     src = os.path.join(sf_dir, "events.parquet")
-    # schema from the actual footers: driver fixtures carry ns-epoch longs
-    # (legacy conf), engine-written datasets carry real timestamps
+    # schema from the actual footers: older fixtures carry ns-epoch
+    # longs (legacy conf), the shipped ones and engine-written datasets
+    # carry real timestamps
     schema = spark.read.parquet(src).schema
     if os.path.isdir(src):
         # already a directory of part files — stream it directly
         stream_path = src
     else:
-        src_dir = os.path.join(
-            _SCRATCH, f"stream_src_{os.path.basename(os.path.normpath(sf_dir))}"
-        )
-        os.makedirs(src_dir, exist_ok=True)
-        link = os.path.join(src_dir, "events.parquet")
-        # absolutize: a RELATIVE src is resolved against the LINK's
-        # directory by the kernel, creating a permanently dangling
-        # symlink that os.path.exists() reports as absent — every
-        # later caller then dies FileExistsError on re-link. Also
-        # heal a stale link left pointing at a different fixture.
-        src_abs = os.path.abspath(src)
-        if os.path.lexists(link) and os.path.realpath(link) != os.path.realpath(src_abs):
-            os.unlink(link)
-        if not os.path.lexists(link):
-            os.symlink(src_abs, link)
-        stream_path = src_dir
-    raw = spark.readStream.schema(schema).parquet(stream_path)
-    ts_type = dict((f.name, f.dataType.simpleString()) for f in schema.fields).get("ts")
-    if ts_type == "bigint":
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_type == "timestamp_ntz":
-        # Watermarks/event-time require TIMESTAMP; session tz is pinned
-        # UTC so this cast is the exact naive-UTC reading (same rule as
-        # catalog.load_table — CORRECTNESS_r02 regression).
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
-
-
-def source_bytes(sf_dir: str, table: str = "events") -> int:
-    """Driver-side size of a streaming source fixture (file or
-    directory of part files) — the input to stream_partitions."""
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isdir(p):
-            return sum(
-                e.stat().st_size for e in os.scandir(p) if e.is_file()
-            )
-        return os.path.getsize(p)
-    except OSError:
-        return 0
+        with _STREAM_SRC_LOCK:
+            if sf_dir not in _STREAM_SRC:
+                _STREAM_SRC[sf_dir] = scratch("stream_src", sf_dir)
+            stream_path = _STREAM_SRC[sf_dir]
+            link = os.path.join(stream_path, "events.parquet")
+            if not os.path.lexists(link):
+                os.makedirs(stream_path, exist_ok=True)
+                # absolutize: a RELATIVE src is resolved against the
+                # LINK's directory by the kernel (a dangling symlink)
+                os.symlink(os.path.abspath(src), link)
+    return normalize_ts(spark.readStream.schema(schema).parquet(stream_path))
 
 
 def stream_partitions(src_bytes: int | None) -> int:
@@ -165,8 +145,7 @@ def run_available_now(
     source size) sizes the state/shuffle partition count adaptively —
     see stream_partitions."""
     name = f"s_sink_{os.getpid()}_{next(_counter)}"
-    ckpt = os.path.join(_SCRATCH, f"ckpt_{name}")
-    shutil.rmtree(ckpt, ignore_errors=True)
+    ckpt = scratch(f"ckpt_{name}")
     spark = df.sparkSession
     with _stream_conf(spark, stream_partitions(src_bytes)):
         q = (
@@ -190,7 +169,7 @@ def tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"), F.round(F.sum("value"), 2).alias("sv"))
     )
     return run_available_now(
-        agg, "complete", src_bytes=source_bytes(sf_dir)
+        agg, "complete", src_bytes=fixture_bytes(sf_dir, "events")
     ).select(F.col("w.start").alias("h"), "event_type", "cnt", "sv")
 
 
@@ -203,7 +182,7 @@ def sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
     )
     return run_available_now(
-        agg, "complete", src_bytes=source_bytes(sf_dir)
+        agg, "complete", src_bytes=fixture_bytes(sf_dir, "events")
     ).select(F.col("w.start").alias("ws"), "event_type", "cnt")
 
 
@@ -220,7 +199,7 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
     )
     return run_available_now(
-        agg, "complete", src_bytes=source_bytes(sf_dir)
+        agg, "complete", src_bytes=fixture_bytes(sf_dir, "events")
     ).select(
         "user_id", F.col("w.start").alias("st"), F.col("w.end").alias("en"), "n"
     )
@@ -284,7 +263,7 @@ def dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = deduped.groupBy("event_type").agg(
         F.count("*").alias("cnt"), F.round(F.sum("value"), 2).alias("sv")
     )
-    return run_available_now(agg, "complete", src_bytes=source_bytes(sf_dir))
+    return run_available_now(agg, "complete", src_bytes=fixture_bytes(sf_dir, "events"))
 
 
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -301,7 +280,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("cnt"),
         F.round(F.sum(F.col("value") * F.col("weight")), 4).alias("weighted"),
     )
-    return run_available_now(agg, "complete", src_bytes=source_bytes(sf_dir))
+    return run_available_now(agg, "complete", src_bytes=fixture_bytes(sf_dir, "events"))
 
 
 def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,22 +327,19 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTES")),
         "inner",
     )
-    return run_available_now(pairs, "append", src_bytes=source_bytes(sf_dir))
+    return run_available_now(pairs, "append", src_bytes=fixture_bytes(sf_dir, "events"))
 
 
 def stream_to_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 sink side: stream → filter/project → parquet file sink
     (append mode, exactly-once via checkpoint + file-sink log), then
     read the committed output back as a batch table."""
-    # per-process paths: concurrent sessions must not share sinks
-    out_dir = os.path.join(_SCRATCH, f"stream_parquet_out_{os.getpid()}")
-    ckpt = os.path.join(_SCRATCH, f"ckpt_stream_parquet_out_{os.getpid()}")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out_dir = scratch("stream_parquet_out")
+    ckpt = scratch("ckpt_stream_parquet_out")
     s = events_stream(spark, sf_dir).filter(F.col("value") > 0).select(
         "event_id", "event_type", "value", "ts"
     )
-    with _stream_conf(spark, stream_partitions(source_bytes(sf_dir))):
+    with _stream_conf(spark, stream_partitions(fixture_bytes(sf_dir, "events"))):
         q = (
             s.writeStream.format("parquet")
             .option("path", out_dir)
@@ -413,7 +389,7 @@ def stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = s.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    out = run_available_now(result, "update", src_bytes=source_bytes(sf_dir))
+    out = run_available_now(result, "update", src_bytes=fixture_bytes(sf_dir, "events"))
     # update-mode into a memory sink APPENDS one row per key per
     # micro-batch; keep only the final emission per user (running n is
     # strictly increasing), so multi-file / maxFilesPerTrigger inputs
@@ -441,10 +417,8 @@ def foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds end-to-end (kill test: tests/test_stream_crash_r11.py). The
     final read folds batches together, which equals the batch answer
     regardless of how availableNow chunked the input."""
-    out_dir = os.path.join(_SCRATCH, f"foreach_batch_out_{os.getpid()}")
-    ckpt = os.path.join(_SCRATCH, f"ckpt_foreach_batch_out_{os.getpid()}")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    out_dir = scratch("foreach_batch_out")
+    ckpt = scratch("ckpt_foreach_batch_out")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -455,7 +429,7 @@ def foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     s = events_stream(spark, sf_dir)
-    with _stream_conf(spark, stream_partitions(source_bytes(sf_dir))):
+    with _stream_conf(spark, stream_partitions(fixture_bytes(sf_dir, "events"))):
         q = (
             s.writeStream.foreachBatch(handle)
             .option("checkpointLocation", ckpt)
@@ -526,7 +500,7 @@ def transform_with_state_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    out = run_available_now(res, "update", src_bytes=source_bytes(sf_dir))
+    out = run_available_now(res, "update", src_bytes=fixture_bytes(sf_dir, "events"))
     from pyspark.sql import Window as W
 
     w = W.partitionBy("user_id").orderBy(F.desc("n"))
@@ -562,9 +536,8 @@ def stream_stream_outer_unmatched(spark: SparkSession, sf_dir: str) -> DataFrame
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "events.parquet")
-    stage = os.path.join(_SCRATCH, f"outer_join_src_{os.getpid()}")
-    shutil.rmtree(stage, ignore_errors=True)
-    os.makedirs(stage, exist_ok=True)
+    stage = scratch("outer_join_src")
+    os.makedirs(stage)
     link = os.path.join(stage, "events.parquet")
     os.symlink(os.path.abspath(src), link)
 
@@ -615,19 +588,11 @@ def stream_stream_outer_unmatched(spark: SparkSession, sf_dir: str) -> DataFrame
 
         ensure_engine_confs(spark)
         schema = spark.read.parquet(link).schema
-        raw = (
+        return normalize_ts(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(stage)
         )
-        ts_type = dict((f.name, f.dataType.simpleString()) for f in schema)["ts"]
-        if ts_type == "bigint":
-            raw = raw.withColumn(
-                "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
-            )
-        elif ts_type == "timestamp_ntz":
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        return raw
 
     clicks = (
         staged_stream()
@@ -676,5 +641,5 @@ def stream_stream_outer_unmatched(spark: SparkSession, sf_dir: str) -> DataFrame
     # filter cannot be pushed below the EventTimeWatermark node, so the
     # flush choreography is preserved and callers see only real rows.
     return run_available_now(
-        pairs, "append", src_bytes=source_bytes(sf_dir)
+        pairs, "append", src_bytes=fixture_bytes(sf_dir, "events")
     ).filter(F.col("c_user") >= 0)

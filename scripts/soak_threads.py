@@ -8,7 +8,7 @@ result hash between the two runs. Any diff is a thread-safety bug
 (shared temp-view collisions, scratch-path races, session-conf
 mutation, non-reentrant driver-side state).
 
-Entries already defend per-process scratch (etl._scratch appends the
+Entries already defend per-process scratch (catalog.scratch appends the
 PID) but NOT per-thread; entries that write scratch inside one process
 must either be idempotent or thread-isolated — this soak is the proof.
 

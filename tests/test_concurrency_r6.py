@@ -4,7 +4,7 @@ entries must be safe under that pattern: scratch paths and temp views
 must not collide, and results must equal sequential execution.
 
 (Cross-PROCESS isolation is separately guaranteed by the pid suffix in
-_scratch; this covers same-process thread concurrency.)
+catalog.scratch; this covers same-process thread concurrency.)
 """
 
 from __future__ import annotations

@@ -42,8 +42,6 @@ BROADCAST_ALLOWED: dict[tuple[str, str], str] = {
         'violation-code lookup: bounded by the code vocabulary (reference data, not corpus-scaling)',
     ('plans/etl.py', 'enrich_geo_bins'):
         'geo bin table: bounded by the division geometry (reference data)',
-    ('queries/baseline.py', '_maybe_broadcast'):
-        'the round-11 size gate itself',
     ('queries/baseline.py', 'q5_region_revenue'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
     ('queries/corpus.py', 'd_skew_profile'):

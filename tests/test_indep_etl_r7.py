@@ -18,6 +18,7 @@ from decimal import Decimal, ROUND_HALF_UP
 import pyarrow.parquet as pq
 import pytest
 
+from parking_violations_data_pipeline_spark.catalog import SCRATCH_ROOT
 from parking_violations_data_pipeline_spark.registry import REGISTRY, all_queries
 
 SF = "/root/testdata/sf0.001"
@@ -285,11 +286,7 @@ class TestCsvRoundtripPhysical:
         import os
 
         got = run(spark, "etl_csv_roundtrip").set_index("o_orderstatus")
-        scratch = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            ".tmp",
-            f"csv_roundtrip-{os.getpid()}",
-        )
+        scratch = os.path.join(SCRATCH_ROOT, f"csv_roundtrip-{os.getpid()}")
         files = sorted(
             {
                 f
@@ -332,11 +329,7 @@ class TestJsonlRoundtripPhysical:
         import os
 
         got = run(spark, "etl_jsonl_roundtrip")
-        scratch = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            ".tmp",
-            f"jsonl_roundtrip-{os.getpid()}",
-        )
+        scratch = os.path.join(SCRATCH_ROOT, f"jsonl_roundtrip-{os.getpid()}")
         files = [
             f
             for f in glob.glob(os.path.join(scratch, "part-*"))

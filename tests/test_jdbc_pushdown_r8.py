@@ -14,24 +14,18 @@ operational pull ships 25 rows or the whole table over the wire:
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
-from parking_violations_data_pipeline_spark.catalog import load_table
+from parking_violations_data_pipeline_spark.catalog import load_table, scratch
 
 SF = "/root/testdata/sf0.01"
 DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".tmp")
-
 
 @pytest.fixture(scope="module")
 def jdbc_nation(spark):
-    db = os.path.join(_SCRATCH, f"derby_pushpin-{os.getpid()}")
-    shutil.rmtree(db, ignore_errors=True)
+    db = scratch("derby_pushpin")
     url = f"jdbc:derby:{db};create=true"
     (
         load_table(spark, SF, "nation")
