@@ -21,6 +21,8 @@ fixture table to its files and decides where the engine writes:
 - `scratch` / `fixture_tag` / `warehouse_path`: per-process scratch
   paths under `<repo>/.tmp`, the fixture-dir tag used in scratch,
   view, table and index names, and managed-table locations.
+- `query_vector`: the `embeddings` row vec_id = 0 that the kNN entries
+  score against, cached on the fixture stamp.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ import hashlib
 import os
 import re
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,6 +96,12 @@ class LRUDict(dict):
 # (25 full fixture-dir table sets) — far above any gate/bench working
 # set, bounded for a long-lived server.
 _TABLE_CACHE: LRUDict = LRUDict(cap=256)
+
+# (sf_dir, embeddings fixture_stamp) -> the vec_id = 0 query vector (or
+# None), fetched once by query_vector; LRU-capped like _TABLE_CACHE. An
+# LRUDict read reorders the dict, so every access holds the lock.
+_QV_CACHE: LRUDict = LRUDict(cap=32)
+_QV_LOCK = threading.Lock()
 
 
 # appId -> monotonic time of the last ensure_engine_confs call. Each
@@ -237,6 +246,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     _TABLE_CACHE[key] = df
     return df
+
+
+def query_vector(
+    embeddings: DataFrame, sf_dir: str, missing: list[float] | None = None
+) -> list[float] | None:
+    """The vec_id = 0 embedding, the query vector of the kNN entries, as
+    floats; `missing` when that row or its embedding is absent. One
+    driver-side head() per (sf_dir, embeddings stamp), so a rewritten
+    embeddings.parquet is fetched again instead of served stale."""
+    key = (sf_dir, fixture_stamp(sf_dir, "embeddings"))
+    with _QV_LOCK:
+        if key not in _QV_CACHE:
+            row = embeddings.filter(F.col("vec_id") == 0).select("embedding").head()
+            _QV_CACHE[key] = (
+                None if row is None or row["embedding"] is None
+                else [float(x) for x in row["embedding"]]
+            )
+        qv = _QV_CACHE[key]
+    return missing if qv is None else list(qv)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -19,7 +19,7 @@ uses — values agree to the microsecond on both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -27,3 +27,20 @@ def epoch_us(col: Column | str) -> Column:
     """Epoch microseconds of a TIMESTAMP or TIMESTAMP_NTZ column."""
     c = col if isinstance(col, Column) else F.col(col)
     return F.unix_micros(c.cast("timestamp"))
+
+
+def hourly_cents(events: DataFrame, alias: str = "cents") -> DataFrame:
+    """(event_type, h, <alias>): the events' value summed in integer cents
+    per event type and epoch hour h = epoch_us(ts) div 3600000000. Each
+    row is rounded to cents before the sum, as the oracles'
+    ``round(value * 100, 0)`` is; NULL ts rows form their own NULL hour."""
+    return (
+        events.select(
+            "event_type",
+            epoch_us("ts").alias("us"),
+            F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
+        )
+        .select("event_type", F.expr("us div 3600000000").alias("h"), "cents")
+        .groupBy("event_type", "h")
+        .agg(F.sum("cents").alias(alias))
+    )

@@ -17,16 +17,10 @@ from parking_violations_data_pipeline_spark.catalog import (
     fixture_tag,
     load_table,
     maybe_broadcast,
+    query_vector,
 )
 from parking_violations_data_pipeline_spark.functions.timeutil import epoch_us
 from parking_violations_data_pipeline_spark.registry import register
-
-# Query-vector cache for q_knn_cosine, keyed by (sf_dir, fixture stamp)
-# so a rewritten embeddings.parquet invalidates the cached literal
-# instead of silently serving the stale vector for the process
-# lifetime. LRU-capped (round 12, VERDICT r11 issue 6).
-_QV_CACHE: LRUDict = LRUDict(cap=32)
-
 
 # per-table temp-view cache for the one-RPC spark.sql() build path
 # (q_word_count r10, q_events_hourly r11): view name per
@@ -426,17 +420,10 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     # query vector is a plan-time parameter: fold it as a literal array
     # (no join stage at all — the scan streams straight into TakeOrdered)
-    cache_key = (sf_dir, fixture_stamp(sf_dir, "embeddings"))
-    if cache_key not in _QV_CACHE:
-        row = e.filter(F.col("vec_id") == 0).select("embedding").head()
-        # missing/NULL query vector → NULL literal, so sims are NULL
-        # (matches the oracle's scalar subquery on the same input:
-        # empty corpus → empty result; absent vec_id 0 → NULL sims)
-        _QV_CACHE[cache_key] = (
-            None if row is None or row["embedding"] is None
-            else [float(x) for x in row["embedding"]]
-        )
-    cached = _QV_CACHE[cache_key]
+    cached = query_vector(e, sf_dir)
+    # missing/NULL query vector → NULL literal, so sims are NULL
+    # (matches the oracle's scalar subquery on the same input:
+    # empty corpus → empty result; absent vec_id 0 → NULL sims)
     if cached is None:
         qv = F.lit(None).cast("array<double>")
         qn = F.lit(None).cast("double")

@@ -5,14 +5,28 @@ back at 100 TB).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parking_violations_data_pipeline_spark.catalog import fixture_tag, load_table
+from parking_violations_data_pipeline_spark.catalog import (
+    LRUDict,
+    fixture_stamp,
+    fixture_tag,
+    load_table,
+    query_vector,
+)
 from parking_violations_data_pipeline_spark.operators import bucketing as BK
 from parking_violations_data_pipeline_spark.operators import similarity as S
 from parking_violations_data_pipeline_spark.registry import register
 from parking_violations_data_pipeline_spark.streaming import jobs
+
+# bucketed table -> fixture_stamp of the table it was written from, so a
+# fixture rewritten in place gets its bucketed copy rewritten as well;
+# the lock keeps two threads from writing the same table at once
+_BUCKETED_FROM: LRUDict = LRUDict(cap=64)
+_BUCKETED_LOCK = threading.Lock()
 
 
 @register(
@@ -32,17 +46,16 @@ def c_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     results to the plain join (the oracle)."""
     tag = fixture_tag(sf_dir)
     lt, rt = f"orders_b_{tag}", f"lineitem_b_{tag}"
-    if not spark.catalog.tableExists(lt):
-        BK.write_bucketed(
-            load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus"),
-            lt, "o_orderkey", buckets=8,
-        )
-    if not spark.catalog.tableExists(rt):
-        BK.write_bucketed(
-            load_table(spark, sf_dir, "lineitem")
-            .select(F.col("l_orderkey").alias("o_orderkey"), "l_quantity"),
-            rt, "o_orderkey", buckets=8,
-        )
+    with _BUCKETED_LOCK:
+        for table, src, cols in (
+            (lt, "orders", ("o_orderkey", "o_orderstatus")),
+            (rt, "lineitem", ("l_orderkey AS o_orderkey", "l_quantity")),
+        ):
+            stamp = fixture_stamp(sf_dir, src)
+            if _BUCKETED_FROM.get(table) != stamp or not spark.catalog.tableExists(table):
+                df = load_table(spark, sf_dir, src).selectExpr(*cols)
+                BK.write_bucketed(df, table, "o_orderkey", buckets=8)
+                _BUCKETED_FROM[table] = stamp
     j = BK.bucketed_join(spark, lt, rt, "o_orderkey")
     return (
         j.groupBy("o_orderstatus")
@@ -64,12 +77,7 @@ def j_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeded k-means makes it deterministic). Oracle reproduces
     k + TRUE."""
     e = load_table(spark, sf_dir, "embeddings")
-    row = e.filter(F.col("vec_id") == 0).select("embedding").head()
-    qv = (
-        [float(x) for x in row["embedding"]]
-        if row and row["embedding"] is not None
-        else [0.0] * 64
-    )
+    qv = query_vector(e, sf_dir, missing=[0.0] * 64)
     # n_probe omitted → auto: the operator starts at 4 probes and
     # widens via the bounded limit-peek on tiny corpora (extremes
     # fixture), which explicit n_probe now skips (round-8 ADVICE fix)

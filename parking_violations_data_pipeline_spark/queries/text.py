@@ -5,6 +5,9 @@ side re-expresses the same semantics in DuckDB SQL (list
 comprehensions over string_split for shingles). LSH/SimHash entries
 are rows-only by design — their recall is probabilistic; the exact
 Jaccard query is the ground truth they are tested against in pytest.
+
+The Q-family entries over the document corpus follow: top n-grams per
+language and RAG context packing under a token budget.
 """
 
 from __future__ import annotations
@@ -595,4 +598,142 @@ def j_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("__in_vocab").isNull().cast("long")).alias("n_oov"),
         )
         .orderBy("source")
+    )
+
+
+@register(
+    "q_top_ngrams_per_group",
+    oracle="""
+WITH w AS (
+  SELECT lang, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+  FROM documents
+),
+b AS (
+  SELECT lang,
+         unnest([ws[i] || ' ' || ws[i + 1]
+                 FOR i IN generate_series(1, len(ws) - 1)]) AS bigram
+  FROM w WHERE len(ws) >= 2
+),
+c AS (SELECT lang, bigram, count(*) AS n FROM b GROUP BY 1, 2),
+r AS (
+  SELECT lang, bigram, n,
+         row_number() OVER (PARTITION BY lang ORDER BY n DESC, bigram) AS rk
+  FROM c
+)
+SELECT lang, bigram, CAST(n AS BIGINT) AS n, CAST(rk AS BIGINT) AS rk
+FROM r WHERE rk <= 3 ORDER BY lang, rk
+""",
+    tags=("J4", "E4", "F3"),
+)
+def q_top_ngrams_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 bigrams per language: n-gram formation (J4) composed with
+    per-group top-k (E4) — the vocabulary-inspection op behind
+    corpus-mix dashboards.
+
+    Bigrams form inside codegen (transform over sequence — no UDF,
+    no self-join); count shuffles on (lang, bigram); the per-lang
+    top-3 window shuffles only the counted pairs (vocab-sized, not
+    corpus-sized). row_number with (n DESC, bigram) is a total order.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    ws = F.filter(F.split("text", " "), lambda x: x != "")
+    b = (
+        d.select("lang", ws.alias("ws"))
+        .filter(F.size("ws") >= 2)
+        .select(
+            "lang",
+            # zip of shifted slices, NOT transform-over-index with
+            # element_at(ws, i): Catalyst inlines the ws alias into the
+            # lambda, re-splitting the document per element — O(words²)
+            # (operators/text.py::word_shingles has the full story)
+            F.explode(
+                F.expr(
+                    "transform(arrays_zip(slice(ws, 1, size(ws) - 1),"
+                    " slice(ws, 2, size(ws) - 1)),"
+                    " s -> concat(s['0'], ' ', s['1']))"
+                )
+            ).alias("bigram"),
+        )
+    )
+    c = b.groupBy("lang", "bigram").agg(F.count("*").alias("n"))
+    w = W.partitionBy("lang").orderBy(F.desc("n"), "bigram")
+    return (
+        c.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 3)
+        .select("lang", "bigram", "n", F.col("rk").cast("long").alias("rk"))
+        .orderBy("lang", "rk")
+    )
+
+
+@register(
+    "q_rag_context_pack",
+    oracle="""
+WITH scored AS (
+  SELECT doc_id, len(string_split(text, ' ')) AS toks,
+    (ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) * 256
+     + ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))) AS rel
+  FROM documents WHERE length(text) > 0
+),
+ranked AS (
+  SELECT doc_id, toks, rel,
+    rel * 1000 // toks AS density_milli,
+    row_number() OVER (ORDER BY rel * 1000 // toks DESC, doc_id) AS rn
+  FROM scored WHERE toks > 0
+),
+packed AS (
+  SELECT doc_id, toks, rel, density_milli,
+    sum(toks) OVER (ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_toks
+  FROM ranked
+)
+SELECT
+  CAST(count(*) AS BIGINT) AS n_docs_packed,
+  CAST(sum(toks) AS BIGINT) AS tokens_used,
+  CAST(sum(rel) AS BIGINT) AS total_relevance,
+  CAST(min(density_milli) AS BIGINT) AS worst_density_milli
+FROM packed WHERE cum_toks <= 1000
+""",
+    tags=("J13", "F3", "E3"),
+)
+def q_rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RAG context assembly under a token budget: candidate documents
+    (relevance stands in as a deterministic md5-derived score — the
+    retrieval score arrives from upstream in production) pack
+    greedily by relevance-per-token DENSITY until the 1000-token
+    budget closes — the fractional-knapsack heuristic every context
+    builder runs between retrieval and the prompt. Fully relational:
+    one density sort + one running token sum + a prefix filter — no
+    driver loop; density on an integer milli grid with doc_id
+    tie-break.
+    """
+    d = load_table(spark, sf_dir, "documents").filter(F.length("text") > 0)
+    h = F.md5(F.col("doc_id").cast("string"))
+    scored = d.select(
+        "doc_id",
+        F.size(F.split("text", " ")).cast("long").alias("toks"),
+        (F.ascii(F.substring(h, 1, 1)) * 256 + F.ascii(F.substring(h, 2, 1)))
+        .cast("long")
+        .alias("rel"),
+    ).filter(F.col("toks") > 0)
+    ranked = scored.select(
+        "doc_id",
+        "toks",
+        "rel",
+        F.expr("rel * 1000 div toks").alias("density_milli"),
+        F.row_number()
+        .over(W.orderBy(F.expr("rel * 1000 div toks").desc(), "doc_id"))
+        .alias("rn"),
+    )
+    packed = ranked.select(
+        "toks",
+        "rel",
+        "density_milli",
+        F.sum("toks")
+        .over(W.orderBy("rn").rowsBetween(W.unboundedPreceding, W.currentRow))
+        .alias("cum_toks"),
+    )
+    return packed.filter(F.col("cum_toks") <= 1000).agg(
+        F.count("*").alias("n_docs_packed"),
+        F.sum("toks").alias("tokens_used"),
+        F.sum("rel").alias("total_relevance"),
+        F.min("density_milli").alias("worst_density_milli"),
     )

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.catalog import maybe_broadcast
+from parking_violations_data_pipeline_spark.catalog import query_vector
 from parking_violations_data_pipeline_spark.functions.vector import cosine_sim, norm
 from parking_violations_data_pipeline_spark.operators import similarity as S
 from parking_violations_data_pipeline_spark.registry import register
@@ -113,12 +114,7 @@ def j_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic planes make the measured value stable). Oracle
     reproduces k + TRUE."""
     e = load_table(spark, sf_dir, "embeddings")
-    row = e.filter(F.col("vec_id") == 0).select("embedding").head()
-    qv = (
-        [float(x) for x in row["embedding"]]
-        if row and row["embedding"] is not None
-        else [0.0] * 64
-    )
+    qv = query_vector(e, sf_dir, missing=[0.0] * 64)
     ann = S.ann_lsh(e, qv, k=10, num_planes=6, probe_hamming=2).select(
         "vec_id", F.lit(1).alias("hit")
     )
@@ -148,12 +144,7 @@ def j_knn_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vectorized-Python path produces oracle-identical results after
     round(…,4)."""
     e = load_table(spark, sf_dir, "embeddings")
-    row = e.filter(F.col("vec_id") == 0).select("embedding").head()
-    qv = (
-        [float(x) for x in row["embedding"]]
-        if row and row["embedding"] is not None
-        else [0.0] * 64
-    )
+    qv = query_vector(e, sf_dir, missing=[0.0] * 64)
     return S.knn_pandas(e, qv, k=10)
 
 
@@ -298,14 +289,6 @@ def j_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Query-vector cache for j_hybrid_search, keyed by (sf_dir, fixture
-# stamp) like baseline._QV_CACHE. LRU-capped (round 12, VERDICT r11
-# issue 6): bounded for long-lived servers cycling many fixture dirs.
-from parking_violations_data_pipeline_spark.catalog import LRUDict, fixture_stamp
-
-_HY_QV_CACHE: LRUDict = LRUDict(cap=32)
-
-
 @register(
     "j_hybrid_search",
     oracle="""
@@ -374,15 +357,7 @@ def j_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "rl")
     )
-    cache_key = (sf_dir, fixture_stamp(sf_dir, "embeddings"))
-    if cache_key not in _HY_QV_CACHE:
-        row = e.filter(F.col("vec_id") == 0).select("embedding").head()
-        _HY_QV_CACHE[cache_key] = (
-            [float(x) for x in row["embedding"]]
-            if row and row["embedding"] is not None
-            else [0.0] * 64
-        )
-    qv = F.array(*[F.lit(x) for x in _HY_QV_CACHE[cache_key]])
+    qv = F.array(*[F.lit(x) for x in query_vector(e, sf_dir, missing=[0.0] * 64)])
     vrank = (
         e.select(
             F.col("vec_id").alias("doc_id"),

@@ -254,7 +254,7 @@ def test_single_writer_lock_is_actually_held(soak, spark):
 def test_build_once_can_call_writers_without_self_deadlock(spark, tmp_path):
     # Round-11 close found this the hard way: build_once holds
     # _path_lock(path) across its build_fn, and the production
-    # composite builds (queries/widen123.py) call ann_index_write +
+    # composite builds (queries/llm_data.py) call ann_index_write +
     # ann_index_append INSIDE it. With a non-reentrant Lock the nested
     # acquire in ann_index_append waits on the lock its own thread
     # holds — the geoskew sweep's stale-index rebuild hung forever

@@ -70,7 +70,7 @@ def test_only_catalog_knows_fixture_files_and_scratch_paths():
         v = violations(p.read_text())
         if v:
             bad[rel] = v
-    assert scanned > 100, f"scan found only {scanned} modules under {PKG}"
+    assert scanned > 50, f"scan found only {scanned} modules under {PKG}"
     assert not bad, (
         "fixture/scratch policy copies outside catalog.py — call "
         "catalog.scratch / fixture_stamp / fixture_bytes / normalize_ts / "

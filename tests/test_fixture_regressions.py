@@ -113,3 +113,31 @@ def test_rewritten_fixture_is_never_served_stale(spark, tmp_path):
     for name in names:
         compare_query(spark, name, sf)
 
+
+
+def test_rewritten_orders_rebuild_the_bucketed_tables(spark, tmp_path):
+    # c_bucketed_join persists bucketed copies of orders and lineitem per
+    # fixture dir; after orders.parquet is rewritten in place the join
+    # must read the new statuses, not the bucketed copy of the old file
+    from parking_violations_data_pipeline_spark.catalog import fixture_tag
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMALL, sf)
+    try:
+        compare_query(spark, "c_bucketed_join", sf)
+        path = tmp_path / "sf" / "orders.parquet"
+        before = path.stat().st_mtime_ns
+        orders = pq.read_table(path)
+        status = pc.if_else(
+            pc.equal(pc.bit_wise_and(orders.column("o_orderkey"), 3), 0),
+            pa.scalar("P", orders.schema.field("o_orderstatus").type),
+            orders.column("o_orderstatus"),
+        )
+        idx = orders.schema.get_field_index("o_orderstatus")
+        pq.write_table(orders.set_column(idx, orders.schema.field(idx), status), path)
+        assert path.stat().st_mtime_ns != before, "rewrite did not change mtime"
+        compare_query(spark, "c_bucketed_join", sf)
+    finally:
+        tag = fixture_tag(sf)
+        for table in (f"orders_b_{tag}", f"lineitem_b_{tag}"):
+            spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -118,121 +118,121 @@ BROADCAST_ALLOWED: dict[tuple[str, str], str] = {
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
     ('queries/vectors.py', 'j_nearest_centroid'):
         'codebook/centroid/top-k frame (k-bounded by the ANN contract)',
-    ('queries/widen10.py', 'e_rolling_active_users'):
+    ('queries/windows.py', 'e_rolling_active_users'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen103.py', 'j_batch_knn'):
+    ('queries/llm_data.py', 'j_batch_knn'):
         'query/probe/anchor parameter frame (bounded by contract, <=10 rows or 1 vector)',
-    ('queries/widen108.py', 'q_topn_other_rollup'):
+    ('queries/business.py', 'q_topn_other_rollup'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen11.py', 'l_grouped_split'):
+    ('queries/features.py', 'l_grouped_split'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen11.py', 'l_target_encode_loo'):
+    ('queries/features.py', 'l_target_encode_loo'):
         'bounded by group-key cardinality (schema-bounded enum: event_type/returnflag/segment/brand/source/lang); glob is 1-row',
-    ('queries/widen12.py', 'j_bigram_logprob'):
+    ('queries/llm_data.py', 'j_bigram_logprob'):
         'vocab here is the 1-row countDistinct aggregate (bg_counts/ctx are size-gated)',
-    ('queries/widen14.py', 'q_trade_pagerank'):
+    ('queries/business.py', 'q_trade_pagerank'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
-    ('queries/widen18.py', 'd_hhi_concentration'):
+    ('queries/aggregations.py', 'd_hhi_concentration'):
         'n is the nation dim; tot is per-nation (<=25 rows)',
-    ('queries/widen18.py', 'q_basket_lift'):
+    ('queries/business.py', 'q_basket_lift'):
         'brand_n is per-brand (schema-bounded brands); n_orders is 1-row',
-    ('queries/widen19.py', '_trade_edges'):
+    ('queries/joins.py', '_trade_edges'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
-    ('queries/widen20.py', 'l_hashed_cross'):
+    ('queries/features.py', 'l_hashed_cross'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
-    ('queries/widen24.py', 'd_gini_coefficient'):
+    ('queries/aggregations.py', 'd_gini_coefficient'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
-    ('queries/widen25.py', 'j_random_projection'):
+    ('queries/llm_data.py', 'j_random_projection'):
         'projection seed matrix (k x dim literals)',
-    ('queries/widen25.py', 'q_seq_pattern_support'):
+    ('queries/analytics.py', 'q_seq_pattern_support'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen26.py', 't_vocab_growth'):
+    ('queries/training.py', 't_vocab_growth'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen29.py', 'q_backlog_aging'):
+    ('queries/business.py', 'q_backlog_aging'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen3.py', 'q_seasonality_profile'):
+    ('queries/analytics.py', 'q_seasonality_profile'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen3.py', 't_lang_balance_resample'):
+    ('queries/training.py', 't_lang_balance_resample'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen30.py', 'd_outlier_tukey'):
+    ('queries/aggregations.py', 'd_outlier_tukey'):
         'bounded by group-key cardinality (schema-bounded enum: event_type/returnflag/segment/brand/source/lang)',
-    ('queries/widen31.py', 'q_trade_balance'):
+    ('queries/business.py', 'q_trade_balance'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
-    ('queries/widen33.py', 'd_kendall_tau'):
+    ('queries/aggregations.py', 'd_kendall_tau'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
-    ('queries/widen33.py', 'q_cross_sell_matrix'):
+    ('queries/business.py', 'q_cross_sell_matrix'):
         'bounded by group-key cardinality (schema-bounded enum: event_type/returnflag/segment/brand/source/lang)',
-    ('queries/widen34.py', 'j_mmr_rerank'):
+    ('queries/llm_data.py', 'j_mmr_rerank'):
         'query/probe/anchor parameter frame (bounded by contract, <=10 rows or 1 vector)',
-    ('queries/widen35.py', 'q_share_of_hierarchy'):
+    ('queries/business.py', 'q_share_of_hierarchy'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
-    ('queries/widen36.py', 't_incremental_dedup'):
+    ('queries/training.py', 't_incremental_dedup'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen37.py', 'q_returns_p_chart'):
+    ('queries/business.py', 'q_returns_p_chart'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen38.py', 'j_hard_negative_mining'):
+    ('queries/llm_data.py', 'j_hard_negative_mining'):
         'query/probe/anchor parameter frame (bounded by contract, <=10 rows or 1 vector)',
-    ('queries/widen4.py', 't_perplexity_buckets'):
+    ('queries/training.py', 't_perplexity_buckets'):
         'bounded by group-key cardinality (schema-bounded enum: event_type/returnflag/segment/brand/source/lang)',
-    ('queries/widen40.py', 'h_record_linkage'):
+    ('queries/scalars.py', 'h_record_linkage'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen41.py', 'q_scenario_sweep'):
+    ('queries/business.py', 'q_scenario_sweep'):
         'literal / driver-built local relation (bounded by construction)',
-    ('queries/widen42.py', 'j_embedding_zscore'):
+    ('queries/llm_data.py', 'j_embedding_zscore'):
         'per-dimension stats (embedding dim-bounded, 64 rows)',
-    ('queries/widen45.py', 'c_join_fanout_audit'):
+    ('queries/joins.py', 'c_join_fanout_audit'):
         '1-row scalar aggregate (scalar-broadcast pattern) x2',
-    ('queries/widen46.py', 'j_filtered_knn'):
+    ('queries/llm_data.py', 'j_filtered_knn'):
         'query/probe/anchor parameter frame (bounded by contract, <=10 rows or 1 vector); t_label is 1-row',
-    ('queries/widen49.py', 'd_quantile_shift'):
+    ('queries/aggregations.py', 'd_quantile_shift'):
         'literal decile grid (9 rows)',
-    ('queries/widen49.py', 'q_skyline_3d_nations'):
+    ('queries/business.py', 'q_skyline_3d_nations'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
-    ('queries/widen5.py', 'c_dpp_partition_pruned_join'):
+    ('queries/joins.py', 'c_dpp_partition_pruned_join'):
         'dim is nation filtered to one region (<=5 rows)',
-    ('queries/widen5.py', 'etl_zorder_cluster'):
+    ('queries/etl.py', 'etl_zorder_cluster'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen50.py', 'd_price_endings'):
+    ('queries/aggregations.py', 'd_price_endings'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen52.py', 't_bloom_prescreen'):
+    ('queries/training.py', 't_bloom_prescreen'):
         'cutoff is 1-row; words is the 64-slot bloom word table (literal)',
-    ('queries/widen54.py', 'e_xbar_r_chart'):
+    ('queries/windows.py', 'e_xbar_r_chart'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen57.py', 'd_sigma_bands'):
+    ('queries/aggregations.py', 'd_sigma_bands'):
         'bounded by group-key cardinality (schema-bounded enum: event_type/returnflag/segment/brand/source/lang)',
-    ('queries/widen57.py', 'd_source_vocab_overlap'):
+    ('queries/aggregations.py', 'd_source_vocab_overlap'):
         'per-source vocab sizes (schema-bounded sources)',
-    ('queries/widen63.py', 'd_durbin_watson'):
+    ('queries/aggregations.py', 'd_durbin_watson'):
         'bounded by group-key cardinality (schema-bounded enum: event_type/returnflag/segment/brand/source/lang)',
-    ('queries/widen64.py', 't_epoch_shuffle'):
+    ('queries/training.py', 't_epoch_shuffle'):
         'literal / driver-built local relation (bounded by construction)',
-    ('queries/widen66.py', 'd_runs_test'):
+    ('queries/aggregations.py', 'd_runs_test'):
         'bounded by group-key cardinality (schema-bounded enum: event_type/returnflag/segment/brand/source/lang)',
-    ('queries/widen67.py', 'etl_volume_anomaly'):
+    ('queries/etl.py', 'etl_volume_anomaly'):
         '1-row scalar aggregate (scalar-broadcast pattern) x2',
-    ('queries/widen69.py', 'j_matryoshka_recall'):
+    ('queries/llm_data.py', 'j_matryoshka_recall'):
         'query/probe/anchor parameter frame (bounded by contract, <=10 rows or 1 vector)',
-    ('queries/widen75.py', 'j_hamming_knn'):
+    ('queries/llm_data.py', 'j_hamming_knn'):
         'query/probe/anchor parameter frame (bounded by contract, <=10 rows or 1 vector)',
-    ('queries/widen76.py', 'd_simpson_paradox'):
+    ('queries/aggregations.py', 'd_simpson_paradox'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen78.py', 'b_transpose_frame'):
+    ('queries/reshape.py', 'b_transpose_frame'):
         'transposed metric spine (one row per metric name, schema-bounded)',
-    ('queries/widen8.py', 'j_label_confusion'):
+    ('queries/llm_data.py', 'j_label_confusion'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
-    ('queries/widen8.py', 'stage'):
+    ('queries/etl.py', 'stage'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen84.py', 'j_ivf_pq'):
+    ('queries/llm_data.py', 'j_ivf_pq'):
         'codebook/centroid/top-k frame (k-bounded by the ANN contract); shortlist is LIMIT 200',
-    ('queries/widen88.py', 'q_multi_touch_attribution'):
+    ('queries/analytics.py', 'q_multi_touch_attribution'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen89.py', 'c_denormalize_obt'):
+    ('queries/joins.py', 'c_denormalize_obt'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
-    ('queries/widen89.py', 'q_price_index'):
+    ('queries/business.py', 'q_price_index'):
         '1-row scalar aggregate (scalar-broadcast pattern)',
-    ('queries/widen91.py', 'j_retrieval_metrics'):
+    ('queries/llm_data.py', 'j_retrieval_metrics'):
         'query/probe/anchor parameter frame (bounded by contract, <=10 rows or 1 vector)',
-    ('queries/widen99.py', 'q_capstone_report'):
+    ('queries/business.py', 'q_capstone_report'):
         'constant-cardinality dim (region/nation, <=25 rows by schema)',
     ('streaming/jobs.py', 'stream_static_join'):
         'literal / driver-built local relation (bounded by construction)',

@@ -34,25 +34,25 @@ CROSSJOIN_ALLOWED: dict[tuple[str, str], str] = {
     ("queries/analytics.py", "q_funnel"): "funnel stages joined onto a 1-row total frame (scalar pattern, un-broadcast side is 1 row)",
     ("queries/pipeline_ops.py", "t_dup_graph_stats"): "cluster-size histogram x 1-row total: both cartesian sides bounded (distinct sizes, scalar)",
     ("queries/relational.py", "c_cross_join"): "C6 entry: cartesian IS the semantics; both sides bounded by design (region x priority, 5x5)",
-    ("queries/widen10.py", "q_funnel_windowed"): "stage frames vs 1-row bounds frame (scalar pattern)",
-    ("queries/widen102.py", "d_poisson_bootstrap_ci"): "resample replicates: B=200 literal-range frame x per-group stats (bounded B x groups)",
-    ("queries/widen106.py", "g_symmetric_diff"): "1-row count frames combined for the audit verdict (scalar pattern x3)",
-    ("queries/widen110.py", "etl_deletion_vectors"): "1-row manifest/scalar frames folded into the audit row",
-    ("queries/widen113.py", "q_merge_intervals"): "1-row total frame onto merged-interval summary (scalar pattern)",
-    ("queries/widen114.py", "e_underwater_duration"): "1-row peak frame onto the drawdown series (scalar pattern)",
-    ("queries/widen116.py", "t_consistent_sample"): "1-row threshold/total frames (scalar pattern x2)",
-    ("queries/widen117.py", "b_three_valued_logic"): "VALUES truth-table literals: 3x3 bounded cartesian by construction",
-    ("queries/widen25.py", "j_random_projection"): "seed-matrix frame (k x dim literals) onto vectors: bounded side is the projection seed",
-    ("queries/widen4.py", "g_except_all"): "1-row count frame for the multiplicity audit (scalar pattern)",
-    ("queries/widen5.py", "etl_zorder_cluster"): "1-row min/max bounds frame for bit-interleave normalization (scalar pattern)",
-    ("queries/widen73.py", "q_triangle_count"): "1-row totals folded into the closure-ratio verdict (scalar pattern x3)",
-    ("queries/widen81.py", "j_kmeans_purity"): "k-row centroid frame onto vectors: bounded side is k centroids",
-    ("queries/widen81.py", "q_network_reciprocity"): "1-row edge-count frame (scalar pattern)",
-    ("queries/widen84.py", "j_ivf_pq"): "k x m codebook rows onto shortlist: bounded side is the PQ codebook",
-    ("queries/widen85.py", "etl_medallion"): "1-row layer-count frames folded into the lineage audit",
-    ("queries/widen86.py", "b_cached_reuse"): "1-row aggregate of the cached frame re-joined (scalar pattern)",
-    ("queries/widen88.py", "q_multi_touch_attribution"): "1-row journey-total frame (scalar pattern)",
-    ("queries/widen88.py", "q_littles_law"): "1-row horizon frame (scalar pattern)",
+    ("queries/analytics.py", "q_funnel_windowed"): "stage frames vs 1-row bounds frame (scalar pattern)",
+    ("queries/aggregations.py", "d_poisson_bootstrap_ci"): "resample replicates: B=200 literal-range frame x per-group stats (bounded B x groups)",
+    ("queries/setops.py", "g_symmetric_diff"): "1-row count frames combined for the audit verdict (scalar pattern x3)",
+    ("queries/etl.py", "etl_deletion_vectors"): "1-row manifest/scalar frames folded into the audit row",
+    ("queries/analytics.py", "q_merge_intervals"): "1-row total frame onto merged-interval summary (scalar pattern)",
+    ("queries/windows.py", "e_underwater_duration"): "1-row peak frame onto the drawdown series (scalar pattern)",
+    ("queries/training.py", "t_consistent_sample"): "1-row threshold/total frames (scalar pattern x2)",
+    ("queries/reshape.py", "b_three_valued_logic"): "VALUES truth-table literals: 3x3 bounded cartesian by construction",
+    ("queries/llm_data.py", "j_random_projection"): "seed-matrix frame (k x dim literals) onto vectors: bounded side is the projection seed",
+    ("queries/setops.py", "g_except_all"): "1-row count frame for the multiplicity audit (scalar pattern)",
+    ("queries/etl.py", "etl_zorder_cluster"): "1-row min/max bounds frame for bit-interleave normalization (scalar pattern)",
+    ("queries/business.py", "q_triangle_count"): "1-row totals folded into the closure-ratio verdict (scalar pattern x3)",
+    ("queries/llm_data.py", "j_kmeans_purity"): "k-row centroid frame onto vectors: bounded side is k centroids",
+    ("queries/business.py", "q_network_reciprocity"): "1-row edge-count frame (scalar pattern)",
+    ("queries/llm_data.py", "j_ivf_pq"): "k x m codebook rows onto shortlist: bounded side is the PQ codebook",
+    ("queries/etl.py", "etl_medallion"): "1-row layer-count frames folded into the lineage audit",
+    ("queries/reshape.py", "b_cached_reuse"): "1-row aggregate of the cached frame re-joined (scalar pattern)",
+    ("queries/analytics.py", "q_multi_touch_attribution"): "1-row journey-total frame (scalar pattern)",
+    ("queries/analytics.py", "q_littles_law"): "1-row horizon frame (scalar pattern)",
     ("queries/windows.py", "s_append_mode"): "1-row watermark-bound frame (scalar pattern)",
 }
 
@@ -66,29 +66,29 @@ COLLECT_ALLOWED: dict[tuple[str, str], str] = {
     ("operators/similarity.py", "ivf_build"): "k centroid rows + k seed rows per round (k<=256 by contract)",
     ("operators/similarity.py", "pq_build"): "m x k codebook rows (<=4096 floats) per round",
     ("queries/sketches.py", "d_count_min_topk"): "CMS sketch: depth x width counter matrix (literal dims)",
-    ("queries/widen113.py", "etl_orphan_gc"): "manifest + orphan file lists: file counts, not rows",
-    ("queries/widen23.py", "j_gram_power_iteration"): "dim-length eigenvector per iteration (64 floats)",
-    ("queries/widen27.py", "etl_retention_prune"): "per-partition retention census (days, not rows)",
-    ("queries/widen27.py", "a_python_datasource_write"): "1-row totals for the manifest cross-check",
-    ("queries/widen32.py", "a_sql_ddl_catalog"): "SHOW TABLES catalog rows (bounded by DDL count)",
-    ("queries/widen34.py", "j_mmr_rerank"): "N_CAND candidate rows + k x k pairwise sims (literal caps)",
-    ("queries/widen36.py", "a_analyze_stats"): "ANALYZE TABLE stats rows (one per column)",
-    ("queries/widen40.py", "a_csv_parse_modes"): "corrupt-record probe rows (fixture-bounded literal file)",
-    ("queries/widen51.py", "t_coreset_greedy_coverage"): "candidate coreset: literal cap rows for the greedy",
-    ("queries/widen52.py", "a_partition_balance"): "per-partition row-count census (num partitions rows)",
-    ("queries/widen62.py", "etl_column_change_profile"): "per-column drift summary (one row per column)",
-    ("queries/widen74.py", "a_binary_files"): "at most 5 doc blobs written as local files (doc_id < 5)",
-    ("queries/widen76.py", "t_bpe_merge_rounds"): "single argmax pair per merge round (1 row x rounds)",
-    ("queries/widen14.py", "q_trade_pagerank"): "nation-graph edges: schema-bounded <= 25x24 rows at every SF (local-relation rebuild replaces a leaked persist)",
-    ("queries/widen19.py", "_trade_edges_local"): "top-3-per-nation edges: schema-bounded <= 75 rows at every SF (local-relation rebuild replaces a leaked persist)",
-    ("queries/widen19.py", "c_transitive_closure"): "top-3-per-nation edges: schema-bounded <= 75 rows at every SF; BFS closure runs driver-side over them (r11 opt — replaced a ~25-job Spark loop)",
-    ("queries/widen80.py", "f_keyset_pagination"): "one page of k rows per iteration (keyset contract)",
-    ("queries/widen81.py", "j_kmeans_purity"): "k centroids per Lloyd round + k purity rows",
-    ("queries/widen81.py", "update"): "k centroid rows inside the Lloyd update helper",
-    ("queries/widen86.py", "b_cached_reuse"): "1-row scalar audit of the cached aggregate",
-    ("queries/widen92.py", "e_dtw_kernel"): "two fixed-length daily series (bounded day counts)",
-    ("queries/widen96.py", "e_haar_energy"): "power-of-two padded daily series (bounded day count)",
-    ("queries/widen98.py", "etl_partition_plan_lpt"): "per-day load census for the driver-side LPT greedy",
+    ("queries/etl.py", "etl_orphan_gc"): "manifest + orphan file lists: file counts, not rows",
+    ("queries/llm_data.py", "j_gram_power_iteration"): "dim-length eigenvector per iteration (64 floats)",
+    ("queries/etl.py", "etl_retention_prune"): "per-partition retention census (days, not rows)",
+    ("queries/scans.py", "a_python_datasource_write"): "1-row totals for the manifest cross-check",
+    ("queries/scans.py", "a_sql_ddl_catalog"): "SHOW TABLES catalog rows (bounded by DDL count)",
+    ("queries/llm_data.py", "j_mmr_rerank"): "N_CAND candidate rows + k x k pairwise sims (literal caps)",
+    ("queries/scans.py", "a_analyze_stats"): "ANALYZE TABLE stats rows (one per column)",
+    ("queries/scans.py", "a_csv_parse_modes"): "corrupt-record probe rows (fixture-bounded literal file)",
+    ("queries/training.py", "t_coreset_greedy_coverage"): "candidate coreset: literal cap rows for the greedy",
+    ("queries/scans.py", "a_partition_balance"): "per-partition row-count census (num partitions rows)",
+    ("queries/etl.py", "etl_column_change_profile"): "per-column drift summary (one row per column)",
+    ("queries/scans.py", "a_binary_files"): "at most 5 doc blobs written as local files (doc_id < 5)",
+    ("queries/training.py", "t_bpe_merge_rounds"): "single argmax pair per merge round (1 row x rounds)",
+    ("queries/business.py", "q_trade_pagerank"): "nation-graph edges: schema-bounded <= 25x24 rows at every SF (local-relation rebuild replaces a leaked persist)",
+    ("queries/business.py", "_trade_edges_local"): "top-3-per-nation edges: schema-bounded <= 75 rows at every SF (local-relation rebuild replaces a leaked persist)",
+    ("queries/joins.py", "c_transitive_closure"): "top-3-per-nation edges: schema-bounded <= 75 rows at every SF; BFS closure runs driver-side over them (r11 opt — replaced a ~25-job Spark loop)",
+    ("queries/ordering.py", "f_keyset_pagination"): "one page of k rows per iteration (keyset contract)",
+    ("queries/llm_data.py", "j_kmeans_purity"): "k centroids per Lloyd round + k purity rows",
+    ("queries/llm_data.py", "update"): "k centroid rows inside the Lloyd update helper",
+    ("queries/reshape.py", "b_cached_reuse"): "1-row scalar audit of the cached aggregate",
+    ("queries/windows.py", "e_dtw_kernel"): "two fixed-length daily series (bounded day counts)",
+    ("queries/windows.py", "e_haar_energy"): "power-of-two padded daily series (bounded day count)",
+    ("queries/etl.py", "etl_partition_plan_lpt"): "per-day load census for the driver-side LPT greedy",
 }
 
 

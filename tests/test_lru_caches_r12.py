@@ -1,7 +1,7 @@
 """Round-12 cache-bound tests (VERDICT r11 issue 6 / next-round item 8).
 
 The module-level plan/view/query-vector caches (_TABLE_CACHE,
-_SQL_VIEWS, _QV_CACHE, _HY_QV_CACHE) grew one entry per
+_SQL_VIEWS, _QV_CACHE) grew one entry per
 (appId, sf_dir, mtime) key for the process lifetime. They are now
 LRUDicts; these tests pin the eviction semantics and that every cache
 actually IS one (a regression back to a plain dict re-opens the leak).
@@ -39,13 +39,12 @@ def test_lru_overwrite_does_not_grow():
 
 def test_all_module_caches_are_bounded():
     from parking_violations_data_pipeline_spark import catalog
-    from parking_violations_data_pipeline_spark.queries import baseline, vectors
+    from parking_violations_data_pipeline_spark.queries import baseline
 
     for cache in (
         catalog._TABLE_CACHE,
-        baseline._QV_CACHE,
+        catalog._QV_CACHE,
         baseline._SQL_VIEWS,
-        vectors._HY_QV_CACHE,
     ):
         assert isinstance(cache, LRUDict), (
             "module-level cache regressed to an unbounded dict "

@@ -54,7 +54,7 @@ def test_closure_edge_build_broadcasts_dims(spark):
     # the closure itself is localCheckpoint'ed (lineage truncation is
     # the point of the loop), so pin the scale-bound stage — the edge
     # build — directly: supplier + 2× nation broadcast, no cartesian
-    from parking_violations_data_pipeline_spark.queries.widen19 import _trade_edges
+    from parking_violations_data_pipeline_spark.queries.joins import _trade_edges
 
     df = _trade_edges(spark, SF_MED)
     df.collect()

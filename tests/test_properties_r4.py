@@ -197,7 +197,7 @@ def test_haar_parseval(xs):
 
 
 def test_poisson_thresholds_monotone():
-    from parking_violations_data_pipeline_spark.queries.widen102 import _POIS
+    from parking_violations_data_pipeline_spark.queries.aggregations import _POIS
 
     ts = [t for t, _ in _POIS]
     ks = [k for _, k in _POIS]

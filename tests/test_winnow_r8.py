@@ -19,7 +19,7 @@ import time
 
 import pyarrow.parquet as pq
 
-from parking_violations_data_pipeline_spark.queries.widen122 import K, WIN
+from parking_violations_data_pipeline_spark.queries.training import K, WIN
 from parking_violations_data_pipeline_spark.registry import REGISTRY, all_queries
 
 SF = "/root/testdata/sf0.001"
@@ -121,7 +121,7 @@ class TestGuarantee:
             (3, "pad " * 3 + "a b c d e f g h i j " * 2),
         ]
         df = spark.createDataFrame(docs, "doc_id long, text string")
-        import parking_violations_data_pipeline_spark.queries.widen122 as W
+        import parking_violations_data_pipeline_spark.queries.training as W
 
         # route the fixture frame through the operator by monkeypatching
         # load_table for this call only
@@ -145,7 +145,7 @@ class TestGuarantee:
         the zipped-slices shape needs milliseconds. 30 s ceiling."""
         text = " ".join(f"tok{i % 977}" for i in range(30000))
         df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-        import parking_violations_data_pipeline_spark.queries.widen122 as W
+        import parking_violations_data_pipeline_spark.queries.training as W
 
         orig = W.load_table
         t0 = time.time()
