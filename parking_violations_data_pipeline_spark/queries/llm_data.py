@@ -85,15 +85,10 @@ def j_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh0.join(df_counts.filter(F.col("docfreq") <= 20).select("sh"), "sh")
         .select("doc_id", "sh")
     )
-    # consumed 3x: sizes + both sides of the pair join. DISK_ONLY
-    # (round-12 re-audit, VERDICT r11 item 5): the posting list scales
-    # with the corpus; default-level deserialized blocks OOMed the
-    # gate's 1g heap at sf0.1 on a comparable materialization (r11
-    # triangle count). Disk blocks never compete with the pair join's
-    # execution memory.
-    from pyspark import StorageLevel
-
-    sh.persist(StorageLevel.DISK_ONLY)
+    # consumed 3x (sizes and both sides of the pair join) but not
+    # persisted: a persist that outlives this call is matched by Spark's
+    # cache lookup to the next call's identical plan, which would then
+    # read these rows after documents.parquet changes
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")

@@ -98,21 +98,27 @@ def stream_partitions(src_bytes: int | None) -> int:
     64 x n_stateful_ops x 3 fsync'd commit files to process a 2 MB
     fixture — measured to dominate every s_* entry's wall time at the
     gate scales. Sizing partitions to the data bounds the commit count
-    while keeping per-partition batch slices ~32 MB.
+    while keeping per-partition batch slices ~8 MB.
 
     Production: `SPARK_GRAFT_STREAM_PARTS` pins the count outright
     (a real deployment sizes state partitions to peak throughput and
     must keep them STABLE across restarts — the count is baked into
     the checkpoint); without it the count derives from the source
-    size at ~32 MB per partition per batch, clamped to [8, 4096].
-    Local fixtures (~2 MB) get the floor of 8; a 100-TB backlog with
-    per-batch admission control gets the cap."""
+    size at ~8 MB per partition per batch, clamped to [1, 4096].
+    Local fixtures (~2 MB) and an empty or unmeasured source get 1
+    partition; a 100-TB backlog with per-batch admission control gets
+    the cap. Measured on 4 cores: s_tumbling_window over 20k events
+    (~0.5 MB) sums ~1000 ms of state-store commit time at 8 partitions
+    and ~45 ms at 1; s_stream_stream_outer over 0.5M events (10 MB)
+    takes 12.2 / 9.2 / 10.0 s at 1 / 2 / 4 partitions, and over 2M
+    events (40 MB) 26.5 / 19.8 / 21.3 s at 2 / 4 / 8, so a 32 MB slice
+    would leave cores idle on state-heavy joins."""
     env = os.environ.get("SPARK_GRAFT_STREAM_PARTS")
     if env and env.isdigit():
         return int(env)
     if not src_bytes or src_bytes <= 0:
-        return 8
-    return max(8, min(4096, math.ceil(src_bytes / (32 << 20))))
+        return 1
+    return min(4096, math.ceil(src_bytes / (8 << 20)))
 
 
 @contextlib.contextmanager

@@ -6,8 +6,9 @@
    same microseconds on all of them. The values are chosen so that
    float division (ns / 1000 as a double) would be 1 µs off.
 2. fixture rewrites: every fixture-derived cache (tables, temp views,
-   cached query vectors) keys on catalog.fixture_stamp, so rewriting a
-   fixture in place is never answered from the old data.
+   cached query vectors) keys on catalog.fixture_stamp, and no entry
+   leaves a persisted plan behind, so rewriting a fixture in place is
+   never answered from the old data.
 """
 
 from __future__ import annotations
@@ -141,3 +142,29 @@ def test_rewritten_orders_rebuild_the_bucketed_tables(spark, tmp_path):
         tag = fixture_tag(sf)
         for table in (f"orders_b_{tag}", f"lineitem_b_{tag}"):
             spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_rewritten_documents_reach_the_shingle_entries(spark, tmp_path):
+    # both entries once persisted their shingle relation and never
+    # released it; Spark's cache lookup matched the next call's identical
+    # plan to those blocks, so a rewritten documents.parquet went unseen
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMALL, sf)
+    names = ("j_minhash_lsh_neardup", "j_shingle_containment")
+    for name in names:
+        compare_query(spark, name, sf)
+    path = tmp_path / "sf" / "documents.parquet"
+    before = path.stat().st_mtime_ns
+    docs = pq.read_table(path)
+    ids = docs.column("doc_id").to_pylist()
+    text = docs.column("text").to_pylist()
+    # doc 1 becomes an exact copy of doc 0: a new near-dup pair
+    text = [text[ids.index(0)] if i == 1 else t for i, t in zip(ids, text)]
+    idx = docs.schema.get_field_index("text")
+    pq.write_table(
+        docs.set_column(idx, docs.schema.field(idx), pa.array(text, docs.schema.field(idx).type)),
+        path,
+    )
+    assert path.stat().st_mtime_ns != before, "rewrite did not change mtime"
+    for name in names:
+        compare_query(spark, name, sf)
