@@ -113,7 +113,7 @@ _QV_LOCK = threading.Lock()
 # enough — BUT a harness that mutates spark.sql.session.timeZone /
 # nanosAsLong MID-session (the round-9 ADVICE drift scenario) would
 # then get divergent timestamp semantics forever. Compromise: re-pin
-# at most once per second (time.monotonic is a local call, no RPC).
+# at most once per 30 s (time.monotonic is a local call, no RPC).
 # Bench-style tight rebuild loops stay RPC-free within the window
 # (a full bench.py pass is ~25 s → at most one re-check, absorbed by
 # min-of-3); any human- or harness-scale drift self-heals on the next

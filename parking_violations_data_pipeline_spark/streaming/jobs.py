@@ -525,35 +525,38 @@ def stream_stream_outer_unmatched(spark: SparkSession, sf_dir: str) -> DataFrame
     the real data, which a single-batch replay never does (the final
     batch's watermark update has no later batch to apply in). So the
     staged source adds two far-future `__flush__` sentinel rows as
-    separate files and reads with maxFilesPerTrigger=1: batch 1 = all
-    real events, batch 2 = flush #1 (advances the watermark), batch 3
-    = flush #2 (runs WITH the advanced watermark → evicts and emits
-    every unmatched click). Sentinels flow through the watermark node
-    AND through the join (a pre-join filter would be pushed below the
-    watermark and freeze it — measured); each sentinel matches its own
+    separate files and reads with maxFilesPerTrigger = the number of
+    event part files (1 for a single-file table): batch 1 = all real
+    events, batch 2 = flush #1 (advances the watermark), batch 3 =
+    flush #2 (runs WITH the advanced watermark → evicts and emits
+    every unmatched click). Each flush batch is padded to that many
+    files with empty ones, so no batch mixes events and sentinels.
+    Sentinels flow through the watermark node AND through the join (a
+    pre-join filter would be pushed below the watermark and freeze it
+    — measured); each sentinel matches its own
     copy on the purchase side (identical timestamp, user_id=-1 — the
     two flush rows sit 2h apart and do NOT match each other), so the
     self-matched sentinel pairs are scrubbed from the drained BATCH
     result here (c_user >= 0) where pushdown can no longer reach the
-    streaming plan. Callers get real rows
-    only. File order is pinned by mtime — the chunked-replay
-    lesson."""
+    streaming plan. Callers get real rows only. File order is pinned
+    by mtime — every staged event file before both flush batches, the
+    chunked-replay lesson."""
     import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "events.parquet")
+    # one file, or a directory of part files (gen_scale_fixtures.py)
+    events = ds.dataset(src, format="parquet")
+    parts = sorted(os.path.abspath(f) for f in events.files)
     stage = scratch("outer_join_src")
     os.makedirs(stage)
-    link = os.path.join(stage, "events.parquet")
-    os.symlink(os.path.abspath(src), link)
 
-    raw_schema = pq.read_schema(src)
+    raw_schema = events.schema
     ts_field = raw_schema.field("ts")
-    hi = [t for t in pq.read_table(src, columns=["ts"])["ts"].to_pylist()
-          if t is not None]
-    if hi:
-        max_ts = max(hi)
-    else:
+    max_ts = pc.max(events.to_table(columns=["ts"])["ts"]).as_py()
+    if max_ts is None:
         # no (non-NULL) event times at all: anchor the flush sentinels
         # at a fixed epoch — they are then the only rows in the stream
         # and the post-drain scrub leaves the correct empty result
@@ -563,6 +566,14 @@ def stream_stream_outer_unmatched(spark: SparkSession, sf_dir: str) -> DataFrame
             import datetime as _dt
 
             max_ts = _dt.datetime(2020, 9, 13)
+    # Each flush batch must be exactly `per_batch` files, so every flush
+    # file but the first of its batch is an empty filler.
+    per_batch = len(parts)
+    now = max(os.stat(p).st_mtime for p in parts)
+    for i, part in enumerate(parts):
+        link = os.path.join(stage, f"events_{i:05d}.parquet")
+        os.symlink(part, link)
+        os.utime(link, (now, now), follow_symlinks=False)
     for i, bump in enumerate((1, 2)):
         if pa.types.is_integer(ts_field.type):
             flush_ts = max_ts + bump * 7_200_000_000_000  # +2h/+4h in ns
@@ -580,23 +591,19 @@ def stream_stream_outer_unmatched(spark: SparkSession, sf_dir: str) -> DataFrame
                 "props": pa.array(["{}"], pa.string()),
             }
         ).cast(raw_schema)
-        pq.write_table(tbl, os.path.join(stage, f"zz_flush_{i}.parquet"))
-    now = os.stat(src).st_mtime
-    os.utime(link, (now, now), follow_symlinks=False) if hasattr(
-        os, "utime"
-    ) else None
-    for i in range(2):
-        p = os.path.join(stage, f"zz_flush_{i}.parquet")
-        os.utime(p, (now + 10 + i, now + 10 + i))
+        for k in range(per_batch):
+            p = os.path.join(stage, f"zz_flush_{i}_{k:05d}.parquet")
+            pq.write_table(tbl if k == 0 else tbl.slice(0, 0), p)
+            os.utime(p, (now + 10 + i, now + 10 + i))
 
     def staged_stream() -> DataFrame:
         from parking_violations_data_pipeline_spark.session import ensure_engine_confs
 
         ensure_engine_confs(spark)
-        schema = spark.read.parquet(link).schema
+        schema = spark.read.parquet(src).schema
         return normalize_ts(
             spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
+            .option("maxFilesPerTrigger", str(per_batch))
             .parquet(stage)
         )
 

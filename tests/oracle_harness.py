@@ -22,6 +22,7 @@ green while the driver goes red:
 from __future__ import annotations
 
 import datetime as _dt
+import os
 
 import duckdb
 import numpy as np
@@ -31,11 +32,14 @@ from parking_violations_data_pipeline_spark.catalog import TABLES
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB views over the fixture tables; a directory-style table
+    (part files) is read through a glob."""
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        src = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(src):
+            src = os.path.join(src, "*.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     return con
 
 

@@ -5,7 +5,10 @@
    through catalog.normalize_ts, so a timestamp[ns] fixture yields the
    same microseconds on all of them. The values are chosen so that
    float division (ns / 1000 as a double) would be 1 µs off.
-2. fixture rewrites: every fixture-derived cache (tables, temp views,
+2. part files: an events table written as a directory of part files
+   (as scripts/gen_scale_fixtures.py writes it) gives the same
+   stream-stream outer join as the single file.
+3. fixture rewrites: every fixture-derived cache (tables, temp views,
    cached query vectors) keys on catalog.fixture_stamp, and no entry
    leaves a persisted plan behind, so rewriting a fixture in place is
    never answered from the old data.
@@ -74,6 +77,20 @@ def test_ns_events_normalize_identically_on_every_path(spark, tmp_path):
     by_id = {r["event_id"]: r["ts"] for r in batch}
     assert {r["event_id"]: r["ts"] for r in stream} == by_id
     assert {r["c_id"]: r["c_ts"] for r in outer} == by_id
+
+
+def test_outer_join_reads_events_split_into_part_files(spark, tmp_path):
+    # the flush choreography staged one file and read its schema and
+    # max ts with pq.read_*, which fail on a directory of part files
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_SMALL, sf)
+    events = pq.read_table(sf / "events.parquet")
+    (sf / "events.parquet").unlink()
+    (sf / "events.parquet").mkdir()
+    half = events.num_rows // 2
+    pq.write_table(events.slice(0, half), sf / "events.parquet" / "part-00000.parquet")
+    pq.write_table(events.slice(half), sf / "events.parquet" / "part-00001.parquet")
+    compare_query(spark, "s_stream_stream_outer", str(sf))
 
 
 def _rewrite_fixtures(sf: str) -> None:
