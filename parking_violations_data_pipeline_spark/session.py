@@ -26,10 +26,11 @@ from pyspark.sql import SparkSession
 # pass's other classes, so an LRU of 100 has often evicted it: a warm pass
 # recompiled 26-62 classes on analytics, 38-77 on pipeline and 88 on the
 # headliners, at ~18-25 ms each. At 1000 a warm pass compiles 0.
-# Running all 501 registry entries once makes 5,636 classes (~11 per
-# entry) while Metaspace grew 71 -> 279 MB, Spark's own lazily loaded
-# classes included, so one class costs <= ~37 KB and the cache stays
-# under ~40 MB. A hit returns the class compiled from byte-identical
+# Running each of the 501 registry entries three times (sf0.001) made
+# 5,949 classes, 5,655 of them on first calls (~11 per entry), while
+# Metaspace grew 71 -> 289 MB, Spark's own lazily loaded classes
+# included, so one class costs <= ~37 KB and the cache stays under
+# ~40 MB. A hit returns the class compiled from byte-identical
 # source, so results cannot change.
 CODEGEN_CACHE_MAX_ENTRIES = 1000
 

@@ -2,8 +2,8 @@
 
 Spark keeps compiled codegen classes in one LRU per JVM, keyed by the
 generated source. At Spark's default cap of 100 the bench headliners
-(124 distinct classes, visited in a fixed cycle) evicted every class just
-before its next use, so each warm pass recompiled 105-111 of them.
+(124 distinct classes at sf0.001) evicted most classes before their next
+use, so a second pass recompiled 88 of them.
 `session.get_spark` sizes the cache so that a warm pass compiles nothing.
 """
 
