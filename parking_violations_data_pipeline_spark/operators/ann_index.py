@@ -46,8 +46,14 @@ Zero-norm and NULL vectors are DROPPED at write/append time (their
 cosine against every centroid is NULL — try_divide by a zero norm —
 so they are directionless: no centroid assignment or sign-bit
 signature is meaningful, and every query ranks them last/NULL anyway).
-The drop mirrors the isNotNull filter and is documented behavior, not
-data loss by accident.
+The drop (`similarity.drop_directionless`, shared with the LSH
+self-join) is documented behavior, not data loss by accident; keep
+such rows in a side table upstream if they must be retrievable.
+
+Assignment, the LSH probe schedule and the exact re-rank are the
+`similarity` module's (`assign_centroids`, `lsh_bucket`,
+`lsh_probe_order`, `knn_bruteforce`), so an indexed query ranks its
+candidates exactly as the in-memory ANN paths do.
 
 All index artifacts are plain parquet + one JSON manifest — readable
 by any engine, no driver-side state survives the session
@@ -65,8 +71,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parking_violations_data_pipeline_spark.functions.localrel import lit_matrix, local_df
-from parking_violations_data_pipeline_spark.functions.vector import cosine_sim, norm
+from parking_violations_data_pipeline_spark.functions.localrel import local_df
+from parking_violations_data_pipeline_spark.functions.vector import sq_l2_to
 from parking_violations_data_pipeline_spark.operators import similarity as S
 
 # one lock per index path: the concurrency soak runs the same registry
@@ -123,76 +129,6 @@ def _stats_dir(path: str, man: dict | None) -> str:
     return f"{path}/{man['stats_dir']}"
 
 
-def _drop_directionless(embeddings: DataFrame, vec_col: str) -> DataFrame:
-    """NULL and zero-norm vectors have no direction: cosine against any
-    centroid is NULL (try_divide), so neither IVF argmax nor LSH sign
-    bits can place them, and every cosine query ranks them NULL-last.
-    Dropping them at index time is the documented contract (mirrors
-    similarity_self_join's bucketing filter); keep such rows in a side
-    table upstream if they must be retrievable."""
-    return embeddings.filter(
-        F.col(vec_col).isNotNull()
-        & (norm(F.col(vec_col).cast("array<double>")) > 0)
-    )
-
-
-def _assign_rows(
-    base: DataFrame, cents: list[list[float]], id_col: str, vec_col: str
-) -> DataFrame:
-    """Row-wise nearest-centroid assignment: one `transform` over the
-    n_lists-slot literal centroid matrix (lit_matrix) folded by
-    `array_max` over (sim, -list) structs — one-pass argmax, identical
-    tie semantics to ivf_build's training assignment (lowest cluster
-    index wins a tie).
-    Map-only — each PHYSICAL row gets its own list, so duplicate ids
-    cannot multiply (the join-back alternative does). Callers must
-    have dropped zero-norm vectors already (else every sim is NULL and
-    the row would fall to the unreachable -1 list)."""
-    e = base.select(
-        id_col,
-        F.col(vec_col).alias("__v"),
-        F.col(vec_col).cast("array<double>").alias("__vd"),
-    )
-    if len(cents) == 1:
-        return e.select(
-            id_col, F.col("__v").alias(vec_col), F.lit(0).alias("list_id")
-        )
-    # ONE transform over a nested n_lists×dim literal matrix (round-11,
-    # guide §7.3 plan size): the previous per-centroid sim columns +
-    # when-chain put O(n_lists) cosine trees in the plan — at the
-    # 4·√n list rule that is thousands of 64-literal subtrees for a
-    # large index build. Identical semantics: same cosine fold per
-    # element, argmax tie-breaks to the lowest index (array_position =
-    # first match, like the low-index-wins chain), NULL sims skipped
-    # on both paths, all-NULL → the unreachable -1 sentinel.
-    cm = lit_matrix(cents)
-    # One-pass argmax via array_max over struct(sim, -index) — each
-    # centroid's cosine evaluated once instead of re-running the
-    # interpreted scoring array for array_max AND array_position.
-    # Struct ordering reproduces the old semantics exactly: NULL sims
-    # lose under max (array_max skipped them), NaN is greatest, ties
-    # break to max(-i) = lowest index, all-NULL → -1 sentinel.
-    best = F.array_max(
-        F.transform(
-            cm,
-            lambda c, i: F.struct(
-                cosine_sim(F.col("__vd"), c).alias("s"), (-i).alias("ni")
-            ),
-        )
-    )
-    # Alias `best` in its own projection: the cluster expression
-    # references it twice, and CollapseProject keeps an expensive alias
-    # used more than once in a separate Project, so the scoring
-    # transform runs once per row.
-    eb = e.select(id_col, "__v", best.alias("__b"))
-    cluster = F.when(
-        F.col("__b")["s"].isNotNull(), (-F.col("__b")["ni"]).cast("int")
-    ).otherwise(F.lit(-1))
-    return eb.select(
-        id_col, F.col("__v").alias(vec_col), cluster.alias("list_id")
-    )
-
-
 def ann_index_write(
     embeddings: DataFrame,
     path: str,
@@ -223,7 +159,7 @@ def ann_index_write(
     Returns a small stats dict (driver-side, corpus-size-independent).
     """
     spark = embeddings.sparkSession
-    base = _drop_directionless(embeddings, vec_col)
+    base = S.drop_directionless(embeddings, vec_col)
     dim_row = base.select(F.size(vec_col).alias("d")).head()
     if dim_row is None or dim_row["d"] is None:
         raise ValueError("ann_index_write: corpus has no non-NULL vectors")
@@ -272,7 +208,9 @@ def ann_index_write(
         # multiply under that join (2 copies -> 4 corpus rows; caught
         # by the dupkeys sweep), and the row-wise argmax fold is
         # map-only — no shuffle at all on the assignment.
-        listed = _assign_rows(base, cents, id_col, vec_col)
+        listed = S.assign_centroids(
+            base.select(id_col, vec_col), vec_col, cents, "list_id"
+        )
         num_planes = 0
         local_df(
             spark,
@@ -321,27 +259,6 @@ def ann_index_write(
             "nonempty_lists": len(stat_rows)}
 
 
-def _lsh_probe_order(qv: list[float], num_planes: int) -> list[int]:
-    """Deterministic probe order for LSH mode: the query's own bucket,
-    then Hamming-1 neighbors (by plane index), then Hamming-2 — the
-    multi-probe schedule `similarity.ann_lsh` uses, made explicit.
-    Bounded: 1 + H + C(H,2) candidates regardless of corpus size —
-    this bound is what lets the stats read prune to the candidates."""
-    qb = 0
-    for h in range(num_planes):
-        plane = S._hyperplane(h, len(qv))
-        if sum(p * q for p, q in zip(plane, qv)) > 0:
-            qb |= 1 << h
-    probes = [qb]
-    probes += [qb ^ (1 << h) for h in range(num_planes)]
-    probes += [
-        qb ^ (1 << a) ^ (1 << b)
-        for a in range(num_planes)
-        for b in range(a + 1, num_planes)
-    ]
-    return probes
-
-
 def _read_stats(
     spark: SparkSession, path: str, candidates: list[int] | None = None
 ) -> dict[int, int]:
@@ -380,23 +297,17 @@ def ann_index_query(
         # O(n_lists) driver read — bounded by the write-side 4·sqrt(n)
         # rule (module docstring): every centroid is needed to rank.
         cents = spark.read.parquet(f"{path}/centroids").collect()
-
-        def cos(a: list[float], b: list[float]) -> float:
-            num = sum(x * y for x, y in zip(a, b))
-            den = math.sqrt(sum(x * x for x in a)) * math.sqrt(
-                sum(y * y for y in b)
-            )
-            return num / den if den else 0.0
-
         ranked = sorted(
             cents,
-            key=lambda r: (-cos([float(x) for x in r["centroid"]], query_vec),
-                           r["list_id"]),
+            key=lambda r: (
+                -S.py_cosine([float(x) for x in r["centroid"]], query_vec),
+                r["list_id"],
+            ),
         )
         probe_order = [int(r["list_id"]) for r in ranked]
         stats = _read_stats(spark, path)
     else:
-        probe_order = _lsh_probe_order(query_vec, num_planes)
+        probe_order = S.lsh_probe_order(query_vec, num_planes)
         # lsh list counts may scale with the corpus: prune the stats
         # read to the bounded probe schedule (isin pushed to parquet)
         stats = _read_stats(spark, path, candidates=probe_order)
@@ -439,14 +350,7 @@ def ann_index_query(
             (F.col("epoch") >= int(man.get("min_epoch", 0)))
             & (F.col("epoch") <= int(man["epoch"]))
         )
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        cand.select(
-            id_col, F.round(cosine_sim(F.col(vec_col), qv), 4).alias("sim")
-        )
-        .orderBy(F.desc("sim"), id_col)
-        .limit(k)
-    )
+    return S.knn_bruteforce(cand, query_vec, k, id_col, vec_col)
 
 
 def ann_index_search(
@@ -520,7 +424,7 @@ def ann_index_append(
 ) -> dict:
     """Incremental index maintenance: assign a NEW batch of vectors to
     the EXISTING inverted lists (ivf: argmax-cosine against the
-    persisted centroids — the same fold ivf_build's assignment uses,
+    persisted centroids — `assign_centroids`, as ivf_build uses,
     so an appended row lands exactly where a full rebuild with these
     centroids would put it; lsh: the map-only sign-bit column) and
     append-write into the partitioned corpus under a NEW epoch. No
@@ -573,7 +477,7 @@ def _append_locked(
     mode, num_planes, dim = (
         meta["mode"], int(meta["num_planes"]), int(meta["dim"])
     )
-    base = _drop_directionless(new_vectors, vec_col)
+    base = S.drop_directionless(new_vectors, vec_col)
     if mode == "ivf":
         cents = [
             [float(x) for x in r["centroid"]]
@@ -581,7 +485,9 @@ def _append_locked(
             .orderBy("list_id")
             .collect()
         ]
-        listed = _assign_rows(base, cents, id_col, vec_col)
+        listed = S.assign_centroids(
+            base.select(id_col, vec_col), vec_col, cents, "list_id"
+        )
     elif mode == "lsh":
         listed = S.lsh_bucket(
             base, num_planes, vec_col, "list_id", dim=dim
@@ -812,20 +718,10 @@ def pq_index_query(
     ]
     if not cand_ids:
         return spark.createDataFrame([], f"{id_col} long, d2 double")
-    qarr = F.array(*[F.lit(float(x)) for x in query_vec])
-    exact_d2 = F.aggregate(
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            qarr,
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     rerank = (
         spark.read.parquet(f"{path}/corpus")
         .filter(F.col(id_col).isin(cand_ids))
-        .select(id_col, F.round(exact_d2, 4).alias("d2"))
+        .select(id_col, F.round(sq_l2_to(F.col(vec_col), query_vec), 4).alias("d2"))
     )
     return rerank.orderBy("d2", id_col).limit(k)
 

@@ -12,16 +12,22 @@ round is one shuffle-join + one aggregate, all DataFrame-native, and
 the labels frame is localCheckpoint'ed so lineage (and the Catalyst
 plan) stays O(1) across rounds instead of growing per iteration.
 Duplicate-cluster graphs are near-clique bundles with tiny diameter,
-so 2-3 rounds converge; the alternating small-star/large-star
+so 2-3 rounds converge. A graph whose diameter exceeds the round cap
+(a long version chain) raises `ComponentsNotConverged` instead of
+returning partial labels; the alternating small-star/large-star
 algorithm (Kiveris et al., "Connected Components in MapReduce and
-Beyond") halves round counts on long-chain graphs and slots into the
-same loop if ever needed.
+Beyond") needs O(log n) rounds there and slots into the same loop.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+class ComponentsNotConverged(RuntimeError):
+    """Label propagation hit its round cap while labels still moved:
+    the labels it has would split components."""
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:
@@ -54,7 +60,11 @@ def connected_components(
     """(node, label) for every node appearing in `edges`, where label
     is the minimum node id of its connected component. Edges are
     treated as undirected (symmetrized internally); isolated nodes
-    are the caller's concern (they never appear in a pair list)."""
+    are the caller's concern (they never appear in a pair list).
+
+    Labels move one hop per round, so a component of diameter d needs
+    d rounds plus one that changes nothing. If `max_iter` rounds end
+    without such a round, raises ComponentsNotConverged."""
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
@@ -95,6 +105,14 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        _release_local_checkpoint(labels)
+        _release_local_checkpoint(e)
+        raise ComponentsNotConverged(
+            f"connected_components: labels still changed after "
+            f"max_iter={max_iter} rounds; the graph's diameter exceeds "
+            "the round cap"
+        )
     # edge frame no longer needed once labels have converged
     _release_local_checkpoint(e)
     return labels

@@ -1,16 +1,27 @@
 """Similarity search over embedding columns (SURVEY.md §2 J7-J10).
 
-Three tiers, by scale:
-  1. `knn_bruteforce` — JVM higher-order-function cosine against a
-     broadcast query vector; exact; O(n) scan, no shuffle. The
-     baseline and the verify path.
-  2. `knn_pandas` — Arrow-batched pandas UDF + numpy matmul for bulk
-     scoring (many query vectors at once); exact; the single-node
-     throughput path.
-  3. `ann_lsh` — random-hyperplane LSH bucketing: sign-bit signature
-     over H deterministic hyperplanes → equi-join per bucket → exact
-     re-rank inside buckets. Approximate; the 100-TB path (shuffle is
-     O(n), candidate scoring is per-bucket).
+Every cosine query path ends in the same exact re-rank: a candidate
+filter, then `knn_bruteforce` — `functions.vector.cosine_to` against
+the query literal, round(…,4), top-k with an id tie-break. The paths
+differ only in how they pick candidates:
+
+  * `knn_bruteforce` — every row; exact; O(n) scan, no shuffle. The
+    baseline and the verify path.
+  * `ann_lsh` — random-hyperplane LSH: rows whose sign-bit bucket
+    (`lsh_bucket`) is in the query's multi-probe schedule
+    (`lsh_probe_order`). Approximate.
+  * `ivf_knn` — IVF: rows whose k-means list (`ivf_build`, assigned by
+    `assign_centroids`) is among the lists nearest the query
+    (`py_cosine` ranks them on the driver). Approximate.
+  * `operators.ann_index` persists the LSH and IVF assignments and
+    reuses `lsh_bucket`, `lsh_probe_order`, `assign_centroids`,
+    `drop_directionless` and `knn_bruteforce` from here.
+
+Beside them: `knn_pandas`, the same kNN scored by an Arrow-batched
+pandas UDF (the K2 surface); `similarity_self_join`, all pairs above a
+cosine threshold (exact crossJoin, or one numpy matmul per LSH
+bucket); `label_centroids`; and product quantization (`pq_build`,
+`pq_adc_knn`, ranked by squared L2 via `functions.vector.sq_l2_to`).
 
 Hyperplanes are generated deterministically from a seed via a hash
 mix (no RNG at plan time — resumable, cluster-reproducible).
@@ -25,7 +36,13 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from parking_violations_data_pipeline_spark.functions.localrel import lit_matrix, local_df
-from parking_violations_data_pipeline_spark.functions.vector import cosine_sim
+from parking_violations_data_pipeline_spark.functions.vector import (
+    cosine_sim,
+    cosine_to,
+    dot,
+    norm,
+    sq_l2_to,
+)
 
 
 def knn_bruteforce(
@@ -35,15 +52,32 @@ def knn_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k by cosine against one query vector (broadcast as a
-    literal array — no join at all). round(…,4)+id tie-break keeps the
-    cut deterministic."""
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    sim = F.round(cosine_sim(F.col(vec_col), qv), 4).alias("sim")
+    """Exact top-k by cosine against one query vector (a literal array
+    — no join at all). round(…,4)+id tie-break keeps the cut
+    deterministic. The ANN paths call it on their candidate rows."""
+    sim = F.round(cosine_to(F.col(vec_col), query_vec), 4).alias("sim")
     return (
         embeddings.select(id_col, sim)
         .orderBy(F.desc("sim"), id_col)
         .limit(k)
+    )
+
+
+def py_cosine(a: list[float], b: list[float]) -> float:
+    """Driver-side cosine for ranking a few centroids against the
+    query; 0.0 when either vector has zero norm."""
+    num = sum(x * y for x, y in zip(a, b))
+    den = math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
+    return num / den if den else 0.0
+
+
+def drop_directionless(embeddings: DataFrame, vec_col: str) -> DataFrame:
+    """Drop NULL and zero-norm vectors: they have no direction, so
+    their cosine against anything is NULL (try_divide), no sign-bit
+    bucket or nearest centroid can place them, and every cosine query
+    ranks them NULL-last."""
+    return embeddings.filter(
+        F.col(vec_col).isNotNull() & (norm(F.col(vec_col)) > 0)
     )
 
 
@@ -144,16 +178,35 @@ def lsh_bucket(
         dim = probe_dim(embeddings, vec_col)
     bucket = F.lit(0)
     for h in range(num_planes):
-        plane = F.array(
-            *[F.lit(c) for c in _hyperplane(plane_offset + h, dim)]
-        )
-        d = F.aggregate(
-            F.zip_with(F.col(vec_col).cast("array<double>"), plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
+        plane = lit_matrix(_hyperplane(plane_offset + h, dim))
+        d = dot(F.col(vec_col), plane)
         bucket = bucket + F.when(d > 0, F.lit(1 << h)).otherwise(0)
     return embeddings.withColumn(out, bucket)
+
+
+def lsh_probe_order(
+    query_vec: list[float], num_planes: int, max_hamming: int = 2
+) -> list[int]:
+    """Multi-probe schedule for a query against planes 0..num_planes-1:
+    the query's own bucket (its sign bits, computed on the driver), then
+    the buckets one sign-flip away (by plane index), then two flips
+    away, up to `max_hamming`. Bounded: 1 + H + C(H,2) buckets whatever
+    the corpus size."""
+    qb = 0
+    for h in range(num_planes):
+        plane = _hyperplane(h, len(query_vec))
+        if sum(p * q for p, q in zip(plane, query_vec)) > 0:
+            qb |= 1 << h
+    probes = [qb]
+    if max_hamming >= 1:
+        probes += [qb ^ (1 << h) for h in range(num_planes)]
+    if max_hamming >= 2:
+        probes += [
+            qb ^ (1 << a) ^ (1 << b)
+            for a in range(num_planes)
+            for b in range(a + 1, num_planes)
+        ]
+    return probes
 
 
 def ann_lsh(
@@ -173,29 +226,11 @@ def ann_lsh(
     partitioned by bucket) and each query touches
     ~n·C(H,≤p)/2^H rows — still a vanishing scan fraction. Recall < 1
     by construction → invariant-checked (recall-vs-exact bound)."""
-    dim = len(query_vec)
-    qbucket = 0
-    for h in range(num_planes):
-        plane = _hyperplane(h, dim)
-        if sum(p * q for p, q in zip(plane, query_vec)) > 0:
-            qbucket |= 1 << h
-    probes = [qbucket]
-    if probe_hamming >= 1:
-        probes += [qbucket ^ (1 << h) for h in range(num_planes)]
-    if probe_hamming >= 2:
-        probes += [
-            qbucket ^ (1 << a) ^ (1 << b)
-            for a in range(num_planes)
-            for b in range(a + 1, num_planes)
-        ]
-    bucketed = lsh_bucket(embeddings, num_planes, vec_col)
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        bucketed.filter(F.col("bucket").isin(probes))
-        .select(id_col, F.round(cosine_sim(F.col(vec_col), qv), 4).alias("sim"))
-        .orderBy(F.desc("sim"), id_col)
-        .limit(k)
+    probes = lsh_probe_order(query_vec, num_planes, probe_hamming)
+    cand = lsh_bucket(embeddings, num_planes, vec_col).filter(
+        F.col("bucket").isin(probes)
     )
+    return knn_bruteforce(cand, query_vec, k, id_col, vec_col)
 
 
 def similarity_self_join(
@@ -205,16 +240,15 @@ def similarity_self_join(
     vec_col: str = "embedding",
     use_lsh: bool = False,
     num_planes: int | None = None,
-    impl: str = "expr",
     max_bucket: int | None = None,
     exact_cap: int = 20_000,
     bands: int = 4,
 ) -> DataFrame:
     """All pairs with cosine > threshold (J9). Exact mode is the
     O(n²) crossJoin — correct, oracle-checkable, only for bounded n.
-    use_lsh=True buckets first so pairs are generated per-bucket
-    (equi-join) — the scale path, approximate recall. impl='pandas'
-    scores each bucket with one Arrow-batched numpy matmul.
+    use_lsh=True buckets first and scores each bucket with one
+    Arrow-batched numpy matmul over unit vectors (applyInPandas) — the
+    scale path, approximate recall.
 
     num_planes=None auto-scales the bucket count with corpus size
     (target ~200 rows/bucket): per-bucket pair work stays ~constant as
@@ -264,26 +298,16 @@ def similarity_self_join(
     )
     if use_lsh:
         # pre-normalize ONCE (n norm computations, not n-per-pair): pair
-        # similarity is then a single dot product — measured ~3× on the
-        # 10× corpus where per-bucket pair counts dominate
-        from parking_violations_data_pipeline_spark.functions.vector import (
-            dot as _dot,
-            norm as _norm,
-        )
-
+        # similarity is then a single dot product
         unit = F.transform(
             F.col(vec_col).cast("array<double>"),
-            lambda x: F.try_divide(x, _norm(F.col(vec_col))),
+            lambda x: F.try_divide(x, norm(F.col(vec_col))),
         )
-        # NULL and zero-norm vectors have no direction — they cannot
-        # participate in cosine LSH (their sims would be NULL anyway);
-        # drop them before bucketing instead of crashing the
-        # normalization (ANSI /0) or the per-bucket numpy matmul
-        base = (
-            embeddings.filter(
-                F.col(vec_col).isNotNull() & (_norm(F.col(vec_col)) > 0)
-            )
-            .select(F.col(id_col).alias("__id"), unit.alias("__vn"))
+        # directionless vectors cannot take part in cosine LSH (their
+        # sims would be NULL anyway); drop them before bucketing instead
+        # of crashing the per-bucket numpy matmul
+        base = drop_directionless(embeddings, vec_col).select(
+            F.col(id_col).alias("__id"), unit.alias("__vn")
         )
         # banded signature in ONE pass: hash under `bands` disjoint
         # plane families as columns, explode to (band, bucket) rows —
@@ -341,50 +365,31 @@ def similarity_self_join(
             # broadcast-cap death (round-12 sweep, guide §3.1). AQE's
             # runtime stats still broadcast it when genuinely small.
             bk = bk.join(keep, ["band", "bucket"])
-        if impl == "pandas":
-            # Arrow path: one numpy matmul per bucket instead of one
-            # expression-tree dot per pair — the throughput option when
-            # buckets are dense (heavy duplication)
-            import numpy as np
-            import pandas as pd
+        # one numpy matmul per bucket instead of one expression-tree
+        # dot per pair
+        import numpy as np
 
-            thr = float(threshold)
+        thr = float(threshold)
 
-            def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-                m = np.stack(pdf["__vn"].to_numpy())
-                ids = pdf["__id"].to_numpy()
-                sims = np.round(m @ m.T, 4)
-                iu, ju = np.triu_indices(len(ids), k=1)
-                # exclude equal-ID pairs: duplicate vec_ids put two
-                # copies in one bucket and triu pairs them by POSITION
-                keep = (sims[iu, ju] > thr) & (ids[iu] != ids[ju])
-                ia, ib = ids[iu[keep]], ids[ju[keep]]
-                lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-                return pd.DataFrame(
-                    {"id_a": lo, "id_b": hi, "sim": sims[iu, ju][keep]}
-                )
+        def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+            m = np.stack(pdf["__vn"].to_numpy())
+            ids = pdf["__id"].to_numpy()
+            sims = np.round(m @ m.T, 4)
+            iu, ju = np.triu_indices(len(ids), k=1)
+            # exclude equal-ID pairs: duplicate vec_ids put two
+            # copies in one bucket and triu pairs them by POSITION
+            keep = (sims[iu, ju] > thr) & (ids[iu] != ids[ju])
+            ia, ib = ids[iu[keep]], ids[ju[keep]]
+            lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
+            return pd.DataFrame(
+                {"id_a": lo, "id_b": hi, "sim": sims[iu, ju][keep]}
+            )
 
-            # a pair found by several bands repeats with an IDENTICAL
-            # rounded sim — distinct() collapses the band union
-            return bk.groupBy("band", "bucket").applyInPandas(
-                bucket_pairs, "id_a long, id_b long, sim double"
-            ).distinct()
-        a = bk.select(
-            F.col("__id").alias("id_a"), F.col("__vn").alias("va"), "band", "bucket"
-        )
-        b = bk.select(
-            F.col("__id").alias("id_b"), F.col("__vn").alias("vb"),
-            F.col("band").alias("band_b"), F.col("bucket").alias("bucket_b"),
-        )
-        pairs = a.join(
-            b,
-            (a.band == b.band_b)
-            & (a.bucket == b.bucket_b)
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        return pairs.select(
-            "id_a", "id_b", F.round(_dot(F.col("va"), F.col("vb")), 4).alias("sim")
-        ).filter(F.col("sim") > threshold).distinct()
+        # a pair found by several bands repeats with an IDENTICAL
+        # rounded sim — distinct() collapses the band union
+        return bk.groupBy("band", "bucket").applyInPandas(
+            bucket_pairs, "id_a long, id_b long, sim double"
+        ).distinct()
     # Lazy in-plan cap guard (scalar-subquery pattern): a 1-row
     # broadcast count that raise_errors when the corpus exceeds
     # exact_cap. This keeps the function a pure plan builder — no
@@ -427,6 +432,48 @@ def similarity_self_join(
     )
 
 
+def assign_centroids(
+    df: DataFrame, vec_col: str, cents: list[list[float]], out: str = "cluster"
+) -> DataFrame:
+    """`df` plus `out` = the index of the centroid with the highest
+    cosine to `vec_col`. Map-only: each physical row gets its own
+    index, so duplicate ids cannot multiply as under a join-back.
+
+    ONE `transform` over a single nested k×dim literal matrix
+    (lit_matrix) instead of k separate cosine trees and a when-chain
+    (round-11, guide §7.3 plan size: that form made Catalyst analysis
+    dominate k-means wall time), with a one-pass argmax via array_max
+    over struct(sim, -index), so each centroid's cosine is evaluated
+    exactly once (an array_position(sims, array_max(sims)) spelling
+    re-evaluates the interpreted scoring array per use). Struct ordering
+    gives the when-chain semantics: NULL sims lose under max, NaN is
+    greatest, ties break to max(-i) = the LOWEST index, and a row whose
+    every sim is NULL (NULL elements, zero norm) gets the -1 sentinel.
+    One centroid assigns every row to 0."""
+    if len(cents) == 1:
+        return df.withColumn(out, F.lit(0))
+    cm = lit_matrix(cents)
+    best = F.array_max(
+        F.transform(
+            cm,
+            lambda c, i: F.struct(
+                cosine_sim(F.col(vec_col), c).alias("s"), (-i).alias("ni")
+            ),
+        )
+    )
+    # Alias `best` in its own projection: the index expression
+    # references it twice, and CollapseProject keeps an expensive alias
+    # used more than once in a separate Project, so the scoring
+    # transform runs once per row (inlining it would run it per
+    # reference).
+    cols = df.columns
+    eb = df.select(*cols, best.alias("__b"))
+    idx = F.when(
+        F.col("__b")["s"].isNotNull(), (-F.col("__b")["ni"]).cast("int")
+    ).otherwise(F.lit(-1))
+    return eb.select(*cols, idx.alias(out))
+
+
 def ivf_build(
     embeddings: DataFrame,
     k: int = 16,
@@ -437,12 +484,10 @@ def ivf_build(
 ) -> tuple[DataFrame, list[list[float]]]:
     """IVF coarse quantizer: k-means (k deterministic seeds = first k
     vectors by id, `iters` Lloyd rounds) implemented with DataFrame ops
-    — assignment is one `transform` over the k-slot literal centroid
-    matrix (lit_matrix) folded by `array_max` over (sim, -cluster)
-    structs (one-pass argmax, round-11 rewrite: no per-centroid score
-    columns, no window), centroid update is one map-side-combinable
-    per-position mean. Only the k×dim centroid matrix ever reaches the
-    driver (tiny at any corpus scale).
+    — assignment is `assign_centroids` (one `transform` over the
+    k-slot literal centroid matrix, one-pass argmax), centroid update
+    is one map-side-combinable per-position mean. Only the k×dim
+    centroid matrix ever reaches the driver (tiny at any corpus scale).
 
     Returns (assignments df (id, cluster), centroids as lists)."""
     # NULL vectors cannot be indexed (no subspace to score) — drop
@@ -456,44 +501,8 @@ def ivf_build(
             "at least one vector to seed a centroid"
         )
     # fewer vectors than k is fine: train that many clusters
-
-    def assign(cents_: list[list[float]]) -> DataFrame:
-        e = embeddings.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-        if len(cents_) == 1:
-            return e.select(id_col, "v", F.lit(0).alias("cluster"))
-        # ONE transform over a single nested k×dim literal matrix
-        # (round-11, guide §7.3 plan size — the k-separate-trees +
-        # when-chain form made Catalyst analysis dominate k-means wall
-        # time), with a one-pass argmax via array_max over
-        # struct(sim, -index) so each centroid's cosine is evaluated
-        # exactly once (an array_position(sims, array_max(sims))
-        # spelling re-evaluates the interpreted scoring array per
-        # use). Struct ordering reproduces the when-chain semantics:
-        # NULL sims lose under max, NaN is greatest, ties break to
-        # max(-i) = the LOWEST index, and an all-NULL row falls to the
-        # -1 unassigned sentinel via the isNotNull gate.
-        cm = lit_matrix(cents_)
-        best = F.array_max(
-            F.transform(
-                cm,
-                lambda c, i: F.struct(
-                    cosine_sim(F.col("v"), c).alias("s"), (-i).alias("ni")
-                ),
-            )
-        )
-        # Alias `best` in its own projection: the cluster expression
-        # references it twice, and CollapseProject keeps an expensive
-        # alias used more than once in a separate Project, so the
-        # scoring transform runs once per row (inlining it would run
-        # it per reference).
-        eb = e.select(id_col, "v", best.alias("__b"))
-        cluster = F.when(
-            F.col("__b")["s"].isNotNull(),
-            (-F.col("__b")["ni"]).cast("int"),
-        ).otherwise(F.lit(-1))
-        return eb.select(id_col, "v", cluster.alias("cluster"))
-
-    asg = assign(cents)
+    e = embeddings.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
+    asg = assign_centroids(e, "v", cents)
     # Centroid update in ONE shuffle (round-11, guide §2.3/§2.4): the
     # old posexplode → groupBy(cluster,pos) → groupBy(cluster) path
     # shuffled dim x n exploded rows through TWO exchanges per Lloyd
@@ -514,7 +523,7 @@ def ivf_build(
         )
         new_cents = dict((r["cluster"], [float(x) for x in r["c"]]) for r in rows)
         cents = [new_cents.get(ci, cents[ci]) for ci in range(len(cents))]
-        asg = assign(cents)
+        asg = assign_centroids(e, "v", cents)
     if return_vec:
         # round-12 (guide §2.4, VERDICT r11 item 4): the assignment
         # plan already carries the vector — returning it lets callers
@@ -544,23 +553,18 @@ def ivf_knn(
     scans ~n_probe/k of the data. Approximate (recall < 1) → rows-only
     correctness class; recall measured in tests.
 
-    `prebuilt` = a (assignments, centroids) pair from ivf_build: pass
-    it when issuing several probes against one corpus (the recall-curve
+    `prebuilt` = an (assignments, centroids) pair from
+    `ivf_build(..., return_vec=True)`: the assignments must carry the
+    vector column, since the probe scan is a filter of them. Pass it
+    when issuing several probes against one corpus (the recall-curve
     shape) so the quantizer is trained ONCE — retraining per probe was
     3x the k-means cost for identical centroids (round-11, guide §1.2:
     don't compute things you throw away)."""
-    import math as _m
-
     asg, cents = (
         prebuilt
         if prebuilt is not None
         else ivf_build(embeddings, k=n_clusters, return_vec=True)
     )
-
-    def cos(a: list[float], b: list[float]) -> float:
-        num = sum(x * y for x, y in zip(a, b))
-        den = _m.sqrt(sum(x * x for x in a)) * _m.sqrt(sum(y * y for y in b))
-        return num / den if den else 0.0
 
     # tiny-corpus probe widening: with n points spread over c lists,
     # n_probe lists hold ~n·n_probe/c candidates — fewer than k when
@@ -583,30 +587,17 @@ def ivf_knn(
             embeddings.filter(F.col(vec_col).isNotNull()).limit(cap).count()
         )
         if 0 < n_peek < cap:
-            need = _m.ceil(k * len(cents) / n_peek)
+            need = math.ceil(k * len(cents) / n_peek)
             n_probe = min(len(cents), max(n_probe, need))
-    probes = sorted(range(len(cents)), key=lambda ci: -cos(cents[ci], query_vec))[:n_probe]
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    if vec_col in asg.columns:
-        # round-12 (guide §2.4, VERDICT r11 item 4): a vector-carrying
-        # assignment table (ivf_build return_vec=True) makes the probe
-        # scan a FILTER of the assignments — the previous form
-        # shuffle-joined the whole embeddings corpus back onto its own
-        # assignments just to re-attach the vector it had already
-        # scored. Scoring arithmetic is identical: the carried column
-        # is the array<double> cast whose elementwise coercion the old
-        # join path applied implicitly inside cosine_sim.
-        cand = asg.filter(F.col("cluster").isin(probes)).select(id_col, vec_col)
-    else:
-        # prebuilt (id, cluster)-only assignments keep the join path
-        cand = embeddings.join(
-            asg.filter(F.col("cluster").isin(probes)).select(id_col), id_col
-        )
-    return (
-        cand.select(id_col, F.round(cosine_sim(F.col(vec_col), qv), 4).alias("sim"))
-        .orderBy(F.desc("sim"), id_col)
-        .limit(k)
-    )
+    probes = sorted(
+        range(len(cents)), key=lambda ci: -py_cosine(cents[ci], query_vec)
+    )[:n_probe]
+    # the vector-carrying assignments make the probe scan a FILTER of
+    # the assignments, not a shuffle-join of the corpus back onto them
+    # (round-12, guide §2.4); the carried column is the array<double>
+    # cast the assignment scored, so the re-rank arithmetic is the same
+    cand = asg.filter(F.col("cluster").isin(probes)).select(id_col, vec_col)
+    return knn_bruteforce(cand, query_vec, k, id_col, vec_col)
 
 
 def label_centroids(
@@ -870,15 +861,7 @@ def pq_adc_knn(
     cand = adc.orderBy("adc", "id").limit(shortlist).select(
         F.col("id").alias(id_col)
     )
-    qarr = F.array(*[F.lit(float(x)) for x in query_vec])
-    exact_d2 = F.aggregate(
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"), qarr, lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     rerank = embeddings.join(F.broadcast(cand), id_col).select(
-        id_col, F.round(exact_d2, 4).alias("d2")
+        id_col, F.round(sq_l2_to(F.col(vec_col), query_vec), 4).alias("d2")
     )
     return rerank.orderBy("d2", id_col).limit(k)

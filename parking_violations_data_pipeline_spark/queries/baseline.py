@@ -415,33 +415,17 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     only dot + self-norm run per row. Scale path: LSH-bucketed variant
     in operators/similarity.py.
     """
-    from parking_violations_data_pipeline_spark.functions.vector import dot, norm
+    from parking_violations_data_pipeline_spark.functions.vector import cosine_to
 
     e = load_table(spark, sf_dir, "embeddings")
     # query vector is a plan-time parameter: fold it as a literal array
     # (no join stage at all — the scan streams straight into TakeOrdered)
-    cached = query_vector(e, sf_dir)
-    # missing/NULL query vector → NULL literal, so sims are NULL
-    # (matches the oracle's scalar subquery on the same input:
-    # empty corpus → empty result; absent vec_id 0 → NULL sims)
-    if cached is None:
-        qv = F.lit(None).cast("array<double>")
-        qn = F.lit(None).cast("double")
-    else:
-        qv = F.array(*[F.lit(x) for x in cached])
-        # Fold the query norm driver-side: a higher-order aggregate over a
-        # literal array is NOT constant-folded by Catalyst, so norm(qv)
-        # would re-traverse the 128-element literal per row AND double the
-        # generated code size (measured 2.2x slower). The python loop below
-        # is the same left-to-right IEEE-double fold the JVM aggregate
-        # performs, so the result is bitwise identical.
-        s = 0.0
-        for x in cached:
-            s += x * x
-        import math
-
-        qn = F.lit(math.sqrt(s))
-    sim = F.try_divide(dot(F.col("embedding"), qv), norm(F.col("embedding")) * qn)
+    # and its norm as a driver-side scalar (functions.vector.cosine_to
+    # says why and why it is bitwise exact). A missing/NULL query vector
+    # is a NULL literal, so sims are NULL (matches the oracle's scalar
+    # subquery on the same input: empty corpus → empty result; absent
+    # vec_id 0 → NULL sims)
+    sim = cosine_to(F.col("embedding"), query_vector(e, sf_dir))
     return (
         e.select("vec_id", "label", F.round(sim, 4).alias("sim"))
         .orderBy(F.desc("sim"), "vec_id")

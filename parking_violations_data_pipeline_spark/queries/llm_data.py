@@ -20,7 +20,7 @@ from parking_violations_data_pipeline_spark.catalog import (
     warehouse_path,
 )
 from parking_violations_data_pipeline_spark.functions.localrel import lit_matrix, local_df
-from parking_violations_data_pipeline_spark.functions.vector import cosine_sim
+from parking_violations_data_pipeline_spark.functions.vector import cosine_sim, sq_l2_to
 from parking_violations_data_pipeline_spark.operators import ann_index as AI
 from parking_violations_data_pipeline_spark.operators import dedup as D
 from parking_violations_data_pipeline_spark.operators import similarity as S
@@ -1609,18 +1609,8 @@ def j_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     qv = query_vector(e, sf_dir, missing=[0.0] * 64)
     pq = S.pq_adc_knn(e, qv, k=10).select("vec_id", F.lit(1).alias("hit"))
-    qarr = F.array(*[F.lit(x) for x in qv])
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            qarr,
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     exact = (
-        e.select("vec_id", F.round(d2, 4).alias("d2"))
+        e.select("vec_id", F.round(sq_l2_to(F.col("embedding"), qv), 4).alias("d2"))
         .orderBy("d2", "vec_id")
         .limit(10)
         .select("vec_id")
@@ -1876,12 +1866,7 @@ def j_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum("d2"), 4).alias("adc"))
     )
     shortlist = adc.orderBy("adc", "id").limit(200).select(F.col("id").alias("vec_id"))
-    qarr = F.array(*[F.lit(x) for x in qv])
-    exact_d2 = F.aggregate(
-        F.zip_with("v", qarr, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    exact_d2 = sq_l2_to(F.col("v"), qv)
     ivfpq_top = (
         e.join(F.broadcast(shortlist), "vec_id")
         .select("vec_id", F.round(exact_d2, 4).alias("d2"))
@@ -2000,8 +1985,6 @@ def j_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"), F.col("label").alias("qlabel")
     )
-    from parking_violations_data_pipeline_spark.functions.vector import cosine_sim
-
     scored = (
         e.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -2153,19 +2136,9 @@ def j_pq_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.lit(1).alias("hit")
     )
     # exact L2 top-10 ground truth (PQ ranks by L2, not cosine)
-    qarr = F.array(*[F.lit(float(x)) for x in qv])
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            qarr,
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     exact = (
         e.filter(F.col("embedding").isNotNull())
-        .select("vec_id", F.round(d2, 4).alias("d2"))
+        .select("vec_id", F.round(sq_l2_to(F.col("embedding"), qv), 4).alias("d2"))
         .orderBy("d2", "vec_id")
         .limit(10)
         .select("vec_id")

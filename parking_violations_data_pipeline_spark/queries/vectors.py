@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from parking_violations_data_pipeline_spark.catalog import load_table
 from parking_violations_data_pipeline_spark.catalog import maybe_broadcast
 from parking_violations_data_pipeline_spark.catalog import query_vector
-from parking_violations_data_pipeline_spark.functions.vector import cosine_sim, norm
+from parking_violations_data_pipeline_spark.functions.vector import cosine_sim, cosine_to, norm
 from parking_violations_data_pipeline_spark.operators import similarity as S
 from parking_violations_data_pipeline_spark.registry import register
 
@@ -74,7 +74,7 @@ def j_sim_self_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     count + TRUE."""
     e = load_table(spark, sf_dir, "embeddings")
     lsh = (
-        S.similarity_self_join(e, 0.3, use_lsh=True, impl="pandas")
+        S.similarity_self_join(e, 0.3, use_lsh=True)
         .select("id_a", "id_b")
         .distinct()
         .withColumn("hit", F.lit(1))
@@ -357,11 +357,11 @@ def j_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "rl")
     )
-    qv = F.array(*[F.lit(x) for x in query_vector(e, sf_dir, missing=[0.0] * 64)])
+    qv = query_vector(e, sf_dir, missing=[0.0] * 64)
     vrank = (
         e.select(
             F.col("vec_id").alias("doc_id"),
-            F.round(cosine_sim(F.col("embedding"), qv), 6).alias("sim"),
+            F.round(cosine_to(F.col("embedding"), qv), 6).alias("sim"),
         )
         .withColumn("rv", F.row_number().over(W.orderBy(F.desc("sim"), "doc_id")))
         .select("doc_id", "rv")

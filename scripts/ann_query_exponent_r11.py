@@ -65,6 +65,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from parking_violations_data_pipeline_spark.operators import ann_index as AI  # noqa: E402
+from parking_violations_data_pipeline_spark.operators import similarity as S  # noqa: E402
 from parking_violations_data_pipeline_spark.session import get_spark  # noqa: E402
 
 BASE = "/root/testdata/sf0.1/embeddings.parquet"
@@ -130,7 +131,7 @@ def main() -> None:
         # probed-row mass, for the scan claim; the stats read here uses
         # the same candidate-pruned path the query does
         meta = spark.read.parquet(f"{idx}/meta").head()
-        order = AI._lsh_probe_order(qv, int(meta["num_planes"]))
+        order = S.lsh_probe_order(qv, int(meta["num_planes"]))
         stats = AI._read_stats(spark, idx, candidates=order)
         probed = [p for p in order if p in stats][:N_PROBE]
         probed_rows = sum(stats[p] for p in probed)
@@ -147,7 +148,7 @@ def main() -> None:
         meta_ts, fixed_ts, auto_ts = [], [], []
         for _ in range(REPEATS):
             t0 = time.perf_counter()
-            o = AI._lsh_probe_order(qv, int(meta["num_planes"]))
+            o = S.lsh_probe_order(qv, int(meta["num_planes"]))
             AI._read_stats(spark, idx, candidates=o)
             meta_ts.append(time.perf_counter() - t0)
             t0 = time.perf_counter()

@@ -264,7 +264,7 @@ def main() -> None:
         (
             "op:sim_self_join_lsh_capped",
             lambda: S.similarity_self_join(
-                e, 0.3, use_lsh=True, impl="pandas", max_bucket=5000
+                e, 0.3, use_lsh=True, max_bucket=5000
             ).count(),
         ),
         (

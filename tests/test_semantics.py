@@ -179,14 +179,16 @@ def test_sample_fraction_and_determinism(spark):
     assert 0.05 * n <= a <= 0.15 * n  # within tolerance of the target fraction
 
 
-def test_lsh_selfjoin_pandas_equals_expr(spark):
+def test_lsh_selfjoin_pairs_are_exact_pairs(spark):
+    """Every pair the bucketed LSH path finds is a pair of the exact
+    crossJoin path, the reference."""
     e = load_table(spark, SF_SMALL, "embeddings")
-    a = {(r.id_a, r.id_b) for r in S.similarity_self_join(e, 0.3, use_lsh=True).collect()}
-    b = {
+    exact = {(r.id_a, r.id_b) for r in S.similarity_self_join(e, 0.3).collect()}
+    lsh = {
         (r.id_a, r.id_b)
-        for r in S.similarity_self_join(e, 0.3, use_lsh=True, impl="pandas").collect()
+        for r in S.similarity_self_join(e, 0.3, use_lsh=True).collect()
     }
-    assert a == b
+    assert lsh and lsh <= exact
 
 
 def test_approx_percentile_tolerance(spark):
@@ -315,13 +317,13 @@ def test_sim_self_join_max_bucket_caps_hot_bucket(spark):
     with _warnings.catch_warnings(record=True) as w:
         _warnings.simplefilter("always")
         capped = S.similarity_self_join(
-            e, 0.5, use_lsh=True, num_planes=4, impl="pandas", max_bucket=50
+            e, 0.5, use_lsh=True, num_planes=4, max_bucket=50
         )
         n = capped.count()
     assert n == 0  # the single hot bucket was dropped entirely
     assert any("dropped" in str(x.message) for x in w)
     # uncapped control: the same corpus yields ~n²/2 pairs
-    full = S.similarity_self_join(e, 0.5, use_lsh=True, num_planes=4, impl="pandas")
+    full = S.similarity_self_join(e, 0.5, use_lsh=True, num_planes=4)
     assert full.count() == 100 * 99 // 2
 
 
@@ -355,6 +357,26 @@ def test_transform_with_state_gated_or_works(spark):
         .collect()
     }
     assert out == batch
+
+
+def test_connected_components_raises_at_round_cap(spark):
+    """A 6-node path needs 5 propagation rounds plus one that changes
+    nothing: with max_iter=2 the loop ends while labels still move,
+    which must raise instead of returning split components."""
+    import pytest as _pytest
+
+    from parking_violations_data_pipeline_spark.operators.graph import (
+        ComponentsNotConverged,
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "src long, dst long"
+    )
+    with _pytest.raises(ComponentsNotConverged, match="max_iter=2"):
+        connected_components(edges, max_iter=2)
+    labels = {r.label for r in connected_components(edges).collect()}
+    assert labels == {0}
 
 
 def test_connected_components_chain_and_clique(spark):

@@ -14,7 +14,7 @@ semantics those rewrites promised to preserve:
   * struct-argmin: NULL d2 (ragged subvector) wins over real distances
     (the old window's NULLS FIRST), ties break to the lowest code,
     all-identical corpora assign every row to code 0
-  * ivf_build / _assign_rows: zero-vector NaN sims win as the old
+  * ivf_build / assign_centroids: zero-vector NaN sims win as the old
     array_max did; all-NULL rows keep the -1 sentinel
 """
 
@@ -25,7 +25,6 @@ import math
 from pyspark.sql import functions as F  # noqa: F401 - parity with peers
 
 from parking_violations_data_pipeline_spark.functions.localrel import lit_matrix
-from parking_violations_data_pipeline_spark.operators import ann_index as AI
 from parking_violations_data_pipeline_spark.operators import similarity as S
 
 
@@ -112,8 +111,8 @@ def test_ivf_all_null_sims_keep_minus_one_sentinel(spark):
 def test_assign_rows_duplicate_centroids_tie_to_lowest(spark):
     rows = [(i, [1.0, 1.0]) for i in range(4)]
     df = _vecs(spark, rows)
-    a = AI._assign_rows(
-        df, [[1.0, 1.0], [1.0, 1.0], [-1.0, -1.0]], "vec_id", "embedding"
+    a = S.assign_centroids(
+        df, "embedding", [[1.0, 1.0], [1.0, 1.0], [-1.0, -1.0]], "list_id"
     )
     assert {r["list_id"] for r in a.collect()} == {0}
 

@@ -50,7 +50,6 @@ class TestHotBucketCap:
                 num_planes=4,
                 bands=2,
                 max_bucket=100,
-                impl="pandas",
             ).collect()
         msgs = [str(x.message) for x in w if "similarity_self_join" in str(x.message)]
         assert msgs, "dropped-bucket warning did not fire"
@@ -72,7 +71,7 @@ class TestHotBucketCap:
         """Without the cap a 380-row bucket is one 380x380 Arrow-batch
         matmul — must return the full hot-pair mass, correctly."""
         pairs = S.similarity_self_join(
-            emb, 0.3, use_lsh=True, num_planes=4, bands=2, impl="pandas"
+            emb, 0.3, use_lsh=True, num_planes=4, bands=2
         )
         n_hot_pairs = 380 * 379 // 2
         got = pairs.count()
